@@ -28,10 +28,6 @@ def main() -> None:
     ap.add_argument("--checkpoint", default=None)
     ap.add_argument("--resume", action="store_true")
     ap.add_argument("--check-interval", type=int, default=5)
-    ap.add_argument("--chain-depth", type=int, default=1,
-                    help="fuse k gather/apply rounds per job; measured "
-                         "+15%% at 8 cores and -8%% at 32 on the 2M "
-                         "corpus (BENCH/BASELINE.md) — tune per cluster")
     ap.add_argument("--delta", action="store_true",
                     help="gather-cache/post_delta mode: only the "
                          "changed frontier scatters each superstep")
@@ -59,7 +55,6 @@ def main() -> None:
         res = pagerank(
             g, tol=args.tol, max_iterations=args.max_iterations,
             checkpoint=store, resume=args.resume,
-            chain_depth=args.chain_depth,
             check_interval=args.check_interval, verbose=True,
         )
     res.state.select("id", "rank").write.mode("overwrite").parquet(args.output)

@@ -21,132 +21,108 @@ pre/post_local_gather (ivertex_program.hpp:729-765), and is what makes
 hub in-degrees scale: each edge partition emits one partial sum per
 (partition, dst).
 
-Scale notes: the edge table is shuffled ONCE (repartition by src,
-persisted); every superstep shuffles only the vertex-state table
+Scale notes: each call shuffles the edge table once (repartition by
+src, persisted); every superstep shuffles only the vertex-state table
 (|V| rows, orders of magnitude smaller than |E| at web scale) plus
 the partially-aggregated contributions.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from typing import Callable
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from ..checkpoint import CheckpointStore
-from ..gas import GASResult, run_gas
+from ..gas import GASResult, make_delta_step, run_gas
 from ..graph import Graph
 
 RESET_PROB = 0.15  # pagerank.cpp:31
 
 
-def pagerank(
-    graph: Graph,
-    tol: float = 1e-6,
-    max_iterations: int = 200,
-    damping: float = 0.85,
-    checkpoint: CheckpointStore | None = None,
-    checkpoint_interval: int = 1,
-    check_interval: int = 1,
-    mode: str = "dataframe",
-    chain_depth: int = 1,
-    plan_hook=None,
-    resume: bool = False,
-    audit_shuffle: bool = False,
-    verbose: bool = False,
-) -> GASResult:
-    """Returns GASResult whose state is (id, rank, out_deg, delta).
+def _src_hashed_edges(
+    graph: Graph, cols: list, norm_col: str, norm_agg: Column
+) -> tuple[DataFrame, DataFrame]:
+    """The loop's edge layout plus its per-source normalizer.
 
-    mode='dataframe' (default): the gather is Catalyst's partial+final
-    hash aggregate — whole-stage codegen end to end.
-    mode='csr': the north-star Arrow kernel — per-partition numpy
-    bincount over CSR-indexed local ids produces one partial sum per
-    (partition, dst); the final groupBy merges |parts| x |local verts|
-    partials instead of |E| rows. Differential-tested against
-    'dataframe' (identical semantics).
-
-    chain_depth=k (dataframe mode): fuse k gather/apply rounds into ONE
-    Spark job per materialization. The per-round plan references the
-    previous round's state exactly once (out_deg lives in a separate
-    static cached table), so the chained plan stays linear — no
-    recompute blowup — and the driver pays job submission + plan
-    analysis + |V|-row cache traffic once per k rounds instead of per
-    round. This is the per-superstep fixed-cost lever behind the
-    N->4N raw scaling number. Convergence compares rank against the
-    chain START (a k-step delta >= the per-step delta on this monotone
-    iteration), so stopping is conservative; ranks are byte-identical
-    to the unchained run at the same round count. GASResult.supersteps
-    counts CHAINS; multiply by chain_depth for rounds.
-    """
-    if chain_depth > 1 and mode != "dataframe":
-        # the fused k-round step exists only for the dataframe plan;
-        # silently dividing max_iterations by chain_depth here would
-        # run a quarter of the requested rounds.
-        raise ValueError(
-            f"chain_depth={chain_depth} requires mode='dataframe' (got {mode!r})"
-        )
-    spark = graph.edges.sparkSession
-    P = graph.num_partitions
-
-    # Edge layout for the iteration: hash-partitioned by src and
-    # persisted, so the per-superstep scatter join shuffles only the
-    # (small) vertex-state side. Only (src, dst) survive column pruning.
+    Edges are hash-partitioned by src and persisted, so the
+    per-superstep scatter join shuffles only the (small) vertex-state
+    side. The normalizer (id, ``norm_col``) aggregates ``norm_agg``
+    over each source's out-edges (out-degree or out-weight)."""
     edges = (
-        graph.edges.select("src", "dst")
-        .repartition(P, "src")
+        graph.edges.select(*cols)
+        .repartition(graph.num_partitions, "src")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     edges.count()
-
-    out_deg = edges.groupBy(F.col("src").alias("id")).agg(
-        F.count(F.lit(1)).alias("out_deg")
+    norm = edges.groupBy(F.col("src").alias("id")).agg(
+        norm_agg.alias(norm_col)
     )
-    init_wide = (
-        graph.vertices.select("id")
+    return edges, norm
+
+
+def _dense_pagerank(
+    graph: Graph,
+    vertices: DataFrame,
+    *,
+    edge_cols: list,
+    norm_col: str,
+    norm_agg: Column,
+    message: Column,
+    init_rank: Column,
+    upd: str,
+    tol: float,
+    **loop,
+) -> GASResult:
+    """The dense superstep loop behind every synchronous PageRank.
+
+    ``vertices`` is (id, *carried): carried columns ride in the static
+    table and in the iteration state. ``edge_cols`` select the edge
+    view, ``norm_agg`` aggregates each source's normalizer
+    ``norm_col`` over it (sources with ``norm_col <= 0`` are dangling
+    and contribute nothing). ``message`` is the per-edge gather term
+    over the edge columns and ``c = rank / norm_col``; ``init_rank``
+    seeds the rank; ``upd`` is the SQL apply expression over
+    ``gathered`` and the carried columns. ``loop`` goes to
+    :func:`run_gas`. Returns state (id, rank, ``norm_col``, delta).
+    """
+    edges, norm = _src_hashed_edges(graph, edge_cols, norm_col, norm_agg)
+    carried = [c for c in vertices.columns if c != "id"]
+
+    # SLIM iteration state: the normalizer never changes, so it lives in
+    # its own cached co-partitioned table and the state that
+    # re-materializes every superstep is (id, *carried, rank, delta)
+    # only — measured ~11% per-superstep on the 1M-page corpus at
+    # local[2] AND local[8] (less state serialized per localCheckpoint,
+    # narrower join rows), byte-identical ranks. The public contract
+    # (state includes the normalizer) is restored by one final join.
+    static = (
+        vertices
         # shuffle_hash: one-time setup join, but its subtree is part of
         # the cached static table's plan — keeping it broadcast-free
         # keeps the whole superstep plan broadcast-free (testable).
-        .join(out_deg.hint("shuffle_hash"), "id", "left")
+        .join(norm.hint("shuffle_hash"), "id", "left")
         .select(
-            "id",
-            F.lit(1.0).alias("rank"),  # pagerank.cpp:52
-            F.coalesce("out_deg", F.lit(0)).alias("out_deg"),
-            F.lit(float("inf")).alias("delta"),
+            "id", *carried, F.coalesce(norm_col, F.lit(0)).alias(norm_col)
         )
-        .repartition(P, "id")
+        .repartition(graph.num_partitions, "id")
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
+    static.count()
+    # init rides the hot static cache: rank/delta are literals, so there
+    # is nothing to join.
+    init = static.select(
+        "id",
+        *carried,
+        init_rank.alias("rank"),
+        F.lit(float("inf")).alias("delta"),
     )
 
-    # SLIM iteration state (dataframe mode): out_deg never changes, so
-    # it lives in its own cached co-partitioned table and the state
-    # that re-materializes every superstep is (id, rank, delta) only —
-    # measured ~11% per-superstep on the 1M-page corpus at local[2]
-    # AND local[8] (less state serialized per localCheckpoint, narrower
-    # join rows), byte-identical ranks. The public contract (state
-    # includes out_deg) is restored by one final join.
-    static = None
-    if mode == "dataframe":
-        static = init_wide.select("id", "out_deg").persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        static.count()
-        # init rides the hot static cache: rank/delta are literals, so
-        # there is nothing to join — an earlier version re-executed the
-        # whole vertices ⋈ out_deg + repartition a second time just to
-        # attach two constants (r6 opt: one setup join execution, not
-        # two; byte-identical init state).
-        init = static.select(
-            "id",
-            F.lit(1.0).alias("rank"),
-            F.lit(float("inf")).alias("delta"),
-        )
-    else:
-        init = init_wide
-
-    def gather_dataframe(state: DataFrame) -> DataFrame:
-        # dangling vertices (out_deg=0) contribute nothing (unnormalized
-        # reference semantics) — filtering them also shrinks the join
-        # input. selectExpr keeps driver-side plan building cheap (one
-        # py4j call vs dozens — measurable at ~85 supersteps).
+    def step(g: Graph, state: DataFrame, i: int):
+        # selectExpr keeps driver-side plan building cheap (one py4j
+        # call vs dozens — measurable at ~85 supersteps).
         #
         # shuffle_hash hints: state, static, and edges are all
         # co-partitioned on the join key (state by id from the previous
@@ -155,98 +131,26 @@ def pagerank(
         # these to broadcast joins — a DRIVER-SERIAL collect + rebuild
         # of |V| rows every superstep, which flatlines scaling
         # (measured: ~4s/superstep at 1M vertices regardless of cores).
-        return (
+        contrib = (
             edges.join(
                 state.join(static.hint("shuffle_hash"), "id")
-                .filter("out_deg > 0")
-                .selectExpr("id", "rank / out_deg AS c")
+                .filter(f"{norm_col} > 0")
+                .selectExpr("id", f"rank / {norm_col} AS c")
                 .hint("shuffle_hash"),
                 edges.src == F.col("id"),
             )
             .groupBy(F.col("dst").alias("id"))
-            .agg(F.sum("c").alias("gathered"))
+            .agg(F.sum(message).alias("gathered"))
         )
-
-    def gather_csr(state: DataFrame) -> DataFrame:
-        """Per-partition sparse gather-scatter (north star): the join
-        output is Arrow-batched into numpy; np.unique builds the
-        partition-local CSR index of dst ids and np.bincount folds the
-        contributions — one partial row per distinct dst per partition
-        (the mirror->master partial gather, synchronous_engine.hpp:
-        1860-1877). Final merge is a groupBy over the partials."""
-        import numpy as np
-        import pandas as pd
-
-        joined = edges.join(
-            state.filter(F.col("out_deg") > 0).select(
-                "id", (F.col("rank") / F.col("out_deg")).alias("c")
-            ),
-            edges.src == F.col("id"),
-        ).select("dst", "c")
-
-        def kern(batches):
-            for b in batches:
-                dst = b["dst"].to_numpy()
-                c = b["c"].to_numpy()
-                uniq, inv = np.unique(dst, return_inverse=True)  # local CSR ids
-                part = np.bincount(inv, weights=c, minlength=len(uniq))
-                yield pd.DataFrame({"id": uniq, "partial": part})
-
-        partials = joined.mapInPandas(kern, schema="id long, partial double")
-        return partials.groupBy("id").agg(F.sum("partial").alias("gathered"))
-
-    gather = gather_csr if mode == "csr" else gather_dataframe
-
-    upd = f"{RESET_PROB} + {damping} * coalesce(gathered, 0.0)"
-
-    if chain_depth > 1 and mode == "dataframe":
-        # each chained round touches the previous state exactly ONCE
-        # (out_deg comes from the static table -> linear plan).
-        def one_round(s: DataFrame) -> DataFrame:
-            contrib = (
-                edges.join(
-                    s.join(static.hint("shuffle_hash"), "id")
-                    .filter("out_deg > 0")
-                    .selectExpr("id", "rank / out_deg AS c")
-                    .hint("shuffle_hash"),
-                    edges.src == F.col("id"),
-                )
-                .groupBy(F.col("dst").alias("id"))
-                .agg(F.sum("c").alias("gathered"))
-            )
-            return static.join(contrib.hint("shuffle_hash"), "id", "left") \
-                .selectExpr("id", f"{upd} AS rank")
-
-        def step(g: Graph, state: DataFrame, i: int):
-            s = state.select("id", "rank")
-            for _ in range(chain_depth):
-                s = one_round(s)
-            # delta vs the chain START (state is materialized, so this
-            # second reference is a cache read, not a recompute)
-            new_state = s.join(
-                state.selectExpr("id", "rank AS _prev").hint("shuffle_hash"),
-                "id",
-            ).selectExpr("id", "rank", "abs(rank - _prev) AS delta")
-            return new_state, None
-    elif mode == "dataframe":
-        def step(g: Graph, state: DataFrame, i: int):
-            contrib = gather(state).hint("shuffle_hash")
-            new_state = state.join(contrib, "id", "left").selectExpr(
-                "id",
-                f"{upd} AS rank",
-                f"abs(({upd}) - rank) AS delta",
-            )
-            return new_state, None
-    else:
-        def step(g: Graph, state: DataFrame, i: int):
-            contrib = gather(state).hint("shuffle_hash")
-            new_state = state.join(contrib, "id", "left").selectExpr(
-                "id",
-                f"{upd} AS rank",
-                "out_deg",
-                f"abs(({upd}) - rank) AS delta",
-            )
-            return new_state, None
+        new_state = state.join(
+            contrib.hint("shuffle_hash"), "id", "left"
+        ).selectExpr(
+            "id",
+            *carried,
+            f"{upd} AS rank",
+            f"abs(({upd}) - rank) AS delta",
+        )
+        return new_state, None
 
     # convergence is observed on the superstep's own materialization
     # job (DataFrame.observe -> accumulators): zero extra jobs/scans.
@@ -257,56 +161,60 @@ def pagerank(
             F.max("delta").alias("metric"),
         ]
 
-    # Resume guard: checkpoints written before the slim-state change
-    # carry out_deg; selecting the mode's exact columns both normalizes
-    # old wide checkpoints (dataframe mode) and fails FAST with a clear
-    # message when the checkpoint can't serve this mode (csr needs
-    # out_deg, which a slim checkpoint doesn't have).
-    state_cols = (
-        ["id", "rank", "delta"] if mode == "dataframe"
-        else ["id", "rank", "out_deg", "delta"]
-    )
+    try:
+        result = run_gas(
+            graph, init, step, observe_aggs=observe_aggs, tol=tol, **loop
+        )
+        # materialized so callers can collect after the caches below
+        # are released
+        result.state = (
+            result.state.join(static.hint("shuffle_hash"), "id")
+            .select("id", "rank", norm_col, "delta")
+            .localCheckpoint(eager=True)
+        )
+        return result
+    finally:
+        static.unpersist()
+        edges.unpersist()
 
-    def resume_transform(df: DataFrame) -> DataFrame:
-        missing = [c for c in state_cols if c not in df.columns]
-        if missing:
-            raise ValueError(
-                f"resumed checkpoint columns {df.columns} are incompatible "
-                f"with pagerank mode={mode!r}: missing {missing} "
-                "(checkpoint written by a different state layout?)"
-            )
-        return df.select(*state_cols)
 
-    # max_iterations is in ROUNDS; run_gas counts chains
-    max_chains = -(-max_iterations // chain_depth)
-    result = run_gas(
+def pagerank(
+    graph: Graph,
+    tol: float = 1e-6,
+    max_iterations: int = 200,
+    damping: float = 0.85,
+    checkpoint: CheckpointStore | None = None,
+    checkpoint_interval: int = 1,
+    check_interval: int = 1,
+    plan_hook=None,
+    resume: bool = False,
+    audit_shuffle: bool = False,
+    verbose: bool = False,
+) -> GASResult:
+    """Returns GASResult whose state is (id, rank, out_deg, delta).
+
+    The gather is Catalyst's partial+final hash aggregate — whole-stage
+    codegen end to end — and each superstep is one gather/apply round.
+    """
+    return _dense_pagerank(
         graph,
-        init,
-        step,
-        observe_aggs=observe_aggs,
+        graph.vertices.select("id"),
+        edge_cols=["src", "dst"],
+        norm_col="out_deg",
+        norm_agg=F.count(F.lit(1)),
+        message=F.col("c"),
+        init_rank=F.lit(1.0),  # pagerank.cpp:52
+        upd=f"{RESET_PROB} + {damping} * coalesce(gathered, 0.0)",
         tol=tol,
-        max_iterations=max_chains,
+        max_iterations=max_iterations,
         checkpoint=checkpoint,
         checkpoint_interval=checkpoint_interval,
         check_interval=check_interval,
         plan_hook=plan_hook,
         resume=resume,
-        resume_transform=resume_transform,
         audit_shuffle=audit_shuffle,
         verbose=verbose,
     )
-    if static is not None:
-        # restore the public state contract (id, rank, out_deg, delta):
-        # one |V|-row co-partitioned join, materialized so callers can
-        # collect after the caches below are released.
-        result.state = (
-            result.state.join(static.hint("shuffle_hash"), "id")
-            .select("id", "rank", "out_deg", "delta")
-            .localCheckpoint(eager=True)
-        )
-        static.unpersist()
-    edges.unpersist()
-    return result
 
 
 def pagerank_weighted(
@@ -327,74 +235,23 @@ def pagerank_weighted(
     (webtext.urls.host_graph). Reduces exactly to :func:`pagerank`
     when every weight is 1 (differential-tested). The reference's
     pagerank is unweighted (pagerank.cpp:99-106); this extends the
-    toolkit with the flagship's plan discipline intact: slim
-    (id, rank, delta) state, a static (id, wout) cache, zero-exchange
-    shuffle-hash joins, observe-fused convergence, one
-    materialization per superstep. Vertices with non-positive total
-    out-weight are dangling (contribute nothing). Weights must be
-    pre-aggregated to ONE row per (src, dst) — Graph.from_edges dedups
-    pairs, so duplicate-pair weight rows never reach this function
-    intact (host_graph output already satisfies this). Returns state
-    (id, rank, wout, delta)."""
-    P = graph.num_partitions
-    edges = (
-        graph.edges.select(
-            "src", "dst", F.col(weight_col).cast("double").alias("w")
-        )
-        .repartition(P, "src")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    edges.count()
-
-    wout = edges.groupBy(F.col("src").alias("id")).agg(
-        F.sum("w").alias("wout")
-    )
-    static = (
-        graph.vertices.select("id")
-        .join(wout.hint("shuffle_hash"), "id", "left")
-        .select("id", F.coalesce("wout", F.lit(0.0)).alias("wout"))
-        .repartition(P, "id")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    static.count()
-    init = static.select(
-        "id", F.lit(1.0).alias("rank"), F.lit(float("inf")).alias("delta")
-    )
-
-    upd = f"{RESET_PROB} + {damping} * coalesce(gathered, 0.0)"
-
-    def step(g: Graph, state: DataFrame, i: int):
-        contrib = (
-            edges.join(
-                state.join(static.hint("shuffle_hash"), "id")
-                .filter("wout > 0")
-                .selectExpr("id", "rank / wout AS c")
-                .hint("shuffle_hash"),
-                edges.src == F.col("id"),
-            )
-            .selectExpr("dst", "w * c AS wc")
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.sum("wc").alias("gathered"))
-        )
-        new_state = state.join(
-            contrib.hint("shuffle_hash"), "id", "left"
-        ).selectExpr(
-            "id", f"{upd} AS rank", f"abs(({upd}) - rank) AS delta"
-        )
-        return new_state, None
-
-    def observe_aggs():
-        return [
-            F.sum(F.when(F.col("delta") > tol, 1).otherwise(0))
-            .cast("long").alias("active"),
-            F.max("delta").alias("metric"),
-        ]
-
-    result = run_gas(
+    toolkit on the same dense superstep: slim (id, rank, delta) state,
+    a static (id, wout) cache, zero-exchange shuffle-hash joins,
+    observe-fused convergence, one materialization per superstep.
+    Vertices with non-positive total out-weight are dangling
+    (contribute nothing). Weights must be pre-aggregated to ONE row
+    per (src, dst) — Graph.from_edges dedups pairs, so duplicate-pair
+    weight rows never reach this function intact (host_graph output
+    already satisfies this). Returns state (id, rank, wout, delta)."""
+    return _dense_pagerank(
         graph,
-        init,
-        step,
-        observe_aggs=observe_aggs,
+        graph.vertices.select("id"),
+        edge_cols=["src", "dst", F.col(weight_col).cast("double").alias("w")],
+        norm_col="wout",
+        norm_agg=F.sum("w"),
+        message=F.col("w") * F.col("c"),
+        init_rank=F.lit(1.0),
+        upd=f"{RESET_PROB} + {damping} * coalesce(gathered, 0.0)",
         tol=tol,
         max_iterations=max_iterations,
         checkpoint=checkpoint,
@@ -403,14 +260,6 @@ def pagerank_weighted(
         resume=resume,
         verbose=verbose,
     )
-    result.state = (
-        result.state.join(static.hint("shuffle_hash"), "id")
-        .select("id", "rank", "wout", "delta")
-        .localCheckpoint(eager=True)
-    )
-    static.unpersist()
-    edges.unpersist()
-    return result
 
 
 def personalized_pagerank(
@@ -432,43 +281,22 @@ def personalized_pagerank(
     reference's uniform reset (pagerank.cpp:99-106; uniform S = every
     vertex recovers standard pagerank ranks exactly). Standard
     link-graph primitive for seed-relative relevance (crawl frontier
-    scoring, related-page ranking). Same plan discipline as the
-    flagship: slim state, static (id, out_deg, is_src) cache,
-    zero-exchange shuffle-hash joins, observe-fused convergence.
+    scoring, related-page ranking). Same dense superstep as
+    :func:`pagerank`, with is_src in the static table and the state.
     Returns state (id, rank, out_deg, delta)."""
-    P = graph.num_partitions
-    edges = (
-        graph.edges.select("src", "dst")
-        .repartition(P, "src")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    edges.count()
-
-    out_deg = edges.groupBy(F.col("src").alias("id")).agg(
-        F.count(F.lit(1)).alias("out_deg")
-    )
-    base = graph.vertices.select("id").join(
-        out_deg.hint("shuffle_hash"), "id", "left"
-    )
     if isinstance(sources, DataFrame):
         flag = sources.select("id").distinct().withColumn(
             "is_src", F.lit(True)
         )
-        base = base.join(flag.hint("shuffle_hash"), "id", "left")
-        src_expr = F.coalesce("is_src", F.lit(False))
-    else:
-        src_expr = F.col("id").isin([int(s) for s in sources])
-    static = (
-        base.select(
-            "id",
-            F.coalesce("out_deg", F.lit(0)).alias("out_deg"),
-            src_expr.alias("is_src"),
+        vertices = (
+            graph.vertices.select("id")
+            .join(flag.hint("shuffle_hash"), "id", "left")
+            .select("id", F.coalesce("is_src", F.lit(False)).alias("is_src"))
         )
-        .repartition(P, "id")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    static.count()
-
+    else:
+        vertices = graph.vertices.select(
+            "id", F.col("id").isin([int(s) for s in sources]).alias("is_src")
+        )
     # explicit DOUBLE casts: bare 0.15/0.0 literals parse as DECIMAL
     # in selectExpr and would leak decimal.Decimal into the rank column
     reset = (
@@ -482,48 +310,15 @@ def personalized_pagerank(
     # origin-chain blowup truncate_plan documents: measured 0.4 -> 1.4
     # -> 3.5 -> 8.4 -> 22 -> 59 s/superstep by step 24 on a 5-vertex
     # fixture. The flagship shape stays flat for 100+ supersteps.
-    init = static.select(
-        "id",
-        "is_src",
-        F.expr(reset).alias("rank"),
-        F.lit(float("inf")).alias("delta"),
-    )
-    upd = f"({reset}) + {damping} * coalesce(gathered, 0.0)"
-
-    def step(g: Graph, state: DataFrame, i: int):
-        contrib = (
-            edges.join(
-                state.join(static.hint("shuffle_hash"), "id")
-                .filter("out_deg > 0")
-                .selectExpr("id", "rank / out_deg AS c")
-                .hint("shuffle_hash"),
-                edges.src == F.col("id"),
-            )
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.sum("c").alias("gathered"))
-        )
-        new_state = state.join(
-            contrib.hint("shuffle_hash"), "id", "left"
-        ).selectExpr(
-            "id",
-            "is_src",
-            f"{upd} AS rank",
-            f"abs(({upd}) - rank) AS delta",
-        )
-        return new_state, None
-
-    def observe_aggs():
-        return [
-            F.sum(F.when(F.col("delta") > tol, 1).otherwise(0))
-            .cast("long").alias("active"),
-            F.max("delta").alias("metric"),
-        ]
-
-    result = run_gas(
+    return _dense_pagerank(
         graph,
-        init,
-        step,
-        observe_aggs=observe_aggs,
+        vertices,
+        edge_cols=["src", "dst"],
+        norm_col="out_deg",
+        norm_agg=F.count(F.lit(1)),
+        message=F.col("c"),
+        init_rank=F.expr(reset),
+        upd=f"({reset}) + {damping} * coalesce(gathered, 0.0)",
         tol=tol,
         max_iterations=max_iterations,
         checkpoint=checkpoint,
@@ -532,14 +327,6 @@ def personalized_pagerank(
         resume=resume,
         verbose=verbose,
     )
-    result.state = (
-        result.state.join(static.hint("shuffle_hash"), "id")
-        .select("id", "rank", "out_deg", "delta")
-        .localCheckpoint(eager=True)
-    )
-    static.unpersist()
-    edges.unpersist()
-    return result
 
 
 def total_rank(state: DataFrame) -> float:
@@ -547,14 +334,27 @@ def total_rank(state: DataFrame) -> float:
     return float(state.agg(F.sum("rank")).first()[0])
 
 
-def _delta_base_step(edges: DataFrame, tol: float, damping: float):
-    """Additive instantiation of the ENGINE-level gather-cache factory
-    (gas.make_delta_step): acc is the cached gather, the emission is
-    the increment since last send, receivers fold deltas with SUM.
-    Shared by pagerank_delta (cold start) and pagerank_warm_start."""
-    from ..gas import make_delta_step
-
-    return make_delta_step(
+def _delta_pagerank(
+    graph: Graph,
+    seed: Callable[[DataFrame], DataFrame],
+    tol: float,
+    damping: float,
+    **loop,
+) -> GASResult:
+    """The gather-cache loop behind pagerank_delta and
+    pagerank_warm_start — the additive instantiation of the engine's
+    delta factory (gas.make_delta_step): acc is the cached gather, the
+    emission is the increment since last send, receivers fold deltas
+    with SUM. ``seed(base)`` maps base = (id, out_deg), out_deg NULL
+    for vertices without out-edges, to the initial state (id, rank,
+    out_deg, acc, sent, changed). ``loop`` goes to :func:`run_gas`."""
+    edges, out_deg = _src_hashed_edges(
+        graph, ["src", "dst"], "out_deg", F.count(F.lit(1))
+    )
+    init = seed(
+        graph.vertices.select("id").join(out_deg, "id", "left")
+    ).repartition(graph.num_partitions, "id")
+    step = make_delta_step(
         edges,
         frontier_pred="changed AND out_deg > 0",
         emit_expr="rank / out_deg - sent",
@@ -575,6 +375,18 @@ def _delta_base_step(edges: DataFrame, tol: float, damping: float):
                        f"END) * out_deg) > {tol} ELSE false END",
         },
     )
+    try:
+        return run_gas(
+            graph,
+            init,
+            step,
+            observe_aggs=lambda: [
+                F.sum(F.col("changed").cast("long")).alias("active")
+            ],
+            **loop,
+        )
+    finally:
+        edges.unpersist()
 
 
 def pagerank_delta(
@@ -608,51 +420,24 @@ def pagerank_delta(
     per-superstep frontier sizes land in GASResult.metrics (active),
     giving the fewer-rows-touched evidence directly.
     """
-    P = graph.num_partitions
-    edges = (
-        graph.edges.select("src", "dst")
-        .repartition(P, "src")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    edges.count()
-    out_deg = edges.groupBy(F.col("src").alias("id")).agg(
-        F.count(F.lit(1)).alias("out_deg")
-    )
-    init = (
-        graph.vertices.select("id")
-        .join(out_deg, "id", "left")
-        .selectExpr(
+    return _delta_pagerank(
+        graph,
+        lambda base: base.selectExpr(
             "id",
             "CAST(1.0 AS DOUBLE) AS rank",  # SQL 1.0 is DECIMAL, not double
             "coalesce(out_deg, 0) AS out_deg",
             "CAST(0.0 AS DOUBLE) AS acc",
             "CAST(0.0 AS DOUBLE) AS sent",
             "coalesce(out_deg, 0) > 0 AS changed",
-        )
-        .repartition(P, "id")
-    )
-
-    base_step = _delta_base_step(edges, tol, damping)
-
-    def step(g: Graph, state: DataFrame, i: int):
-        new_state, _ = base_step(g, state, i)
-        return new_state, lambda df: df.filter("changed").select("id")
-
-    result = run_gas(
-        graph,
-        init,
-        step,
-        observe_aggs=lambda: [
-            F.sum(F.col("changed").cast("long")).alias("active")
-        ],
+        ),
+        tol,
+        damping,
         max_iterations=max_iterations,
         checkpoint=checkpoint,
         checkpoint_interval=checkpoint_interval,
         check_interval=check_interval,
         verbose=verbose,
     )
-    edges.unpersist()
-    return result
 
 
 def pagerank_warm_start(
@@ -694,16 +479,6 @@ def pagerank_warm_start(
     run on the updated graph (differential-tested allclose 1e-6) in
     fewer supersteps and far fewer touched rows.
     """
-    P = graph.num_partitions
-    edges = (
-        graph.edges.select("src", "dst")
-        .repartition(P, "src")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    edges.count()
-    out_deg = edges.groupBy(F.col("src").alias("id")).agg(
-        F.count(F.lit(1)).alias("out_deg")
-    )
     prev = prev_state.select("id", "acc", "sent")
     # one-time cache corrections: each new edge u->v owes v the source's
     # standing emission (sources absent from prev_state are new vertices
@@ -714,48 +489,37 @@ def pagerank_warm_start(
         .groupBy(F.col("dst").alias("id"))
         .agg(F.sum("_s").alias("corr"))
     )
-    init = (
-        graph.vertices.select("id")
-        .join(out_deg, "id", "left")
-        .join(prev, "id", "left")
-        .join(corr, "id", "left")
-        .selectExpr(
-            "id",
-            "coalesce(out_deg, 0) AS out_deg",
-            "coalesce(acc, CAST(0.0 AS DOUBLE)) + "
-            "coalesce(corr, CAST(0.0 AS DOUBLE)) AS acc",
-            "coalesce(sent, CAST(0.0 AS DOUBLE)) AS sent",
+
+    def seed(base: DataFrame) -> DataFrame:
+        return (
+            base.join(prev, "id", "left")
+            .join(corr, "id", "left")
+            .selectExpr(
+                "id",
+                "coalesce(out_deg, 0) AS out_deg",
+                "coalesce(acc, CAST(0.0 AS DOUBLE)) + "
+                "coalesce(corr, CAST(0.0 AS DOUBLE)) AS acc",
+                "coalesce(sent, CAST(0.0 AS DOUBLE)) AS sent",
+            )
+            .selectExpr(
+                "id",
+                f"{RESET_PROB} + {damping} * acc AS rank",
+                "out_deg",
+                "acc",
+                "sent",
+                f"out_deg > 0 AND abs(({RESET_PROB} + {damping} * acc) "
+                f"- sent * out_deg) > {tol} AS changed",
+            )
         )
-        .selectExpr(
-            "id",
-            f"{RESET_PROB} + {damping} * acc AS rank",
-            "out_deg",
-            "acc",
-            "sent",
-            f"out_deg > 0 AND abs(({RESET_PROB} + {damping} * acc) "
-            f"- sent * out_deg) > {tol} AS changed",
-        )
-        .repartition(P, "id")
-    )
 
-    base_step = _delta_base_step(edges, tol, damping)
-
-    def step(g: Graph, state: DataFrame, i: int):
-        new_state, _ = base_step(g, state, i)
-        return new_state, lambda df: df.filter("changed").select("id")
-
-    result = run_gas(
+    return _delta_pagerank(
         graph,
-        init,
-        step,
-        observe_aggs=lambda: [
-            F.sum(F.col("changed").cast("long")).alias("active")
-        ],
+        seed,
+        tol,
+        damping,
         max_iterations=max_iterations,
         checkpoint=checkpoint,
         checkpoint_interval=checkpoint_interval,
         check_interval=check_interval,
         verbose=verbose,
     )
-    edges.unpersist()
-    return result

@@ -22,9 +22,11 @@ by an eager localCheckpoint — and the frontier/convergence checks then
 run against the materialized RDD (cheap scans). This both truncates
 the logical plan every superstep (the #1 Spark iterative-loop pitfall:
 unbounded lineage) and avoids the cache-miss re-execution blowup that
-a persist-only chain exhibits under AQE. Per-superstep cost is one
-job: scatter join (state broadcast when small, shuffle otherwise) +
-gather partial/final agg + apply projection.
+a persist-only chain exhibits under AQE. A superstep's plan is a
+shuffle-hash scatter join + gather partial/final agg + apply
+projection; AQE submits each shuffle-map stage as its own job, so a
+steady dense PageRank superstep runs 3 Spark jobs (10k-page crawl, 4
+partitions, 4 vCPUs).
 """
 
 from __future__ import annotations
@@ -257,7 +259,6 @@ def run_gas(
     edge_aggregators: dict[str, list] | None = None,
     plan_hook: Callable[[DataFrame, int], None] | None = None,
     resume: bool = False,
-    resume_transform: Callable[[DataFrame], DataFrame] | None = None,
     audit_shuffle: bool = False,
     origin_free_checkpoint: bool = False,
     verbose: bool = False,
@@ -300,6 +301,9 @@ def run_gas(
         F.col("dst_component")).cast("long"))``). Evaluated at each
         termination check against the MATERIALIZED state (cheap scans,
         never re-runs the superstep) and recorded in metrics extras.
+    ``resume``: continue from ``checkpoint.latest()``. The checkpoint
+        must carry every column of ``init_state`` (extra columns are
+        dropped); a missing one raises ValueError.
     """
     _ckpt = truncate_plan if origin_free_checkpoint else (
         lambda df: df.localCheckpoint(eager=True)
@@ -312,12 +316,17 @@ def run_gas(
         resumed = checkpoint.latest()
         if resumed is not None:
             start_step, state = resumed
-            if resume_transform is not None:
-                # algorithms use this to validate/normalize checkpoints
-                # written by an older state layout (e.g. pagerank's wide
-                # -> slim state change) instead of failing later with an
-                # ambiguous-column AnalysisException mid-superstep.
-                state = resume_transform(state)
+            # a checkpoint is input from outside this run: it may carry
+            # an older state layout. Select init_state's columns in
+            # order, or fail here instead of with an ambiguous-column
+            # AnalysisException mid-superstep.
+            missing = [c for c in init_state.columns if c not in state.columns]
+            if missing:
+                raise ValueError(
+                    f"resumed checkpoint columns {state.columns} lack "
+                    f"{missing} of the state layout {init_state.columns}"
+                )
+            state = state.select(*init_state.columns)
             if verbose:
                 print(f"[gas] resumed at superstep {start_step}")
 
@@ -385,7 +394,10 @@ def run_gas(
                 extras.update(_eval_aggregators(ev, edge_aggregators))
             if shuffle_base is not None:
                 cur = total_shuffle_write_bytes(state.sparkSession)
-                extras["shuffle_write_bytes"] = cur - shuffle_base
+                # -1 means the counter is unavailable: no delta to report
+                extras["shuffle_write_bytes"] = (
+                    None if -1 in (cur, shuffle_base) else cur - shuffle_base
+                )
                 shuffle_base = cur
 
             m = SuperstepMetrics(i, n_active, metric, time.time() - t0, extras)

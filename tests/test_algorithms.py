@@ -223,21 +223,6 @@ def test_parallelism_invariance(spark):
     assert res[2] == res[8]
 
 
-# ------------------------------------------------- execution-mode variants
-def test_pagerank_csr_mode_differential(spark):
-    """North-star CSR Arrow kernel must match the Catalyst hash-agg
-    path bit-for-bit-ish (same float sum order is not guaranteed, so
-    1e-12 tolerance)."""
-    g = build(spark, PL_EDGES)
-    a = pagerank(g, tol=1e-9, max_iterations=60)
-    b = pagerank(g, tol=1e-9, max_iterations=60, mode="csr")
-    ra = {r["id"]: r["rank"] for r in a.state.collect()}
-    rb = {r["id"]: r["rank"] for r in b.state.collect()}
-    assert set(ra) == set(rb)
-    for k in ra:
-        assert math.isclose(ra[k], rb[k], abs_tol=1e-12), k
-
-
 def test_pagerank_check_interval_equivalent(spark):
     """check_interval overshoots termination by <k supersteps; final
     state must still be within tol of the per-step-checked run."""
@@ -382,27 +367,6 @@ def test_pagerank_warm_start_matches_cold(spark):
     assert warm_rows < 0.5 * cold_rows, (warm_rows, cold_rows)
 
 
-def test_pagerank_chain_depth_matches_unchained(spark):
-    """chain_depth=k fuses k rounds per job; at the same round count
-    the ranks must be byte-identical to the unchained run."""
-    g = build(spark, PL_EDGES)
-    a = pagerank(g, tol=0.0, max_iterations=10, check_interval=100)
-    b = pagerank(g, tol=0.0, max_iterations=10, chain_depth=5,
-                 check_interval=100)
-    ra = {r["id"]: r["rank"] for r in a.state.collect()}
-    rb = {r["id"]: r["rank"] for r in b.state.collect()}
-    assert ra.keys() == rb.keys()
-    assert all(abs(ra[k] - rb[k]) < 1e-12 for k in ra)
-    assert b.supersteps == 2  # 2 chains of 5 rounds
-    # and converged mode agrees with dense within tolerance
-    c = pagerank(g, tol=1e-6, max_iterations=120, chain_depth=4,
-                 check_interval=2)
-    d = pagerank(g, tol=1e-6, max_iterations=120, check_interval=4)
-    rc = {r["id"]: r["rank"] for r in c.state.collect()}
-    rd = {r["id"]: r["rank"] for r in d.state.collect()}
-    assert all(abs(rc[k] - rd[k]) < 1e-5 for k in rc)
-
-
 def test_edge_aggregator_metrics_stream(spark):
     """add_edge_aggregator surface (distributed_aggregator.hpp:458):
     a per-check map_reduce over edges with BOTH endpoints' state —
@@ -426,9 +390,12 @@ def test_edge_aggregator_metrics_stream(spark):
     assert vals[0] >= vals[-1]     # monotone-ish shrink on this fixture
 
 
-def test_shuffle_audit_metrics(spark):
+def test_shuffle_audit_metrics(spark, monkeypatch):
     """audit_shuffle records shuffle-write bytes per check window —
-    the per-superstep shuffle-volume evidence (VERDICT r3 item 6)."""
+    the per-superstep shuffle-volume evidence (VERDICT r3 item 6) —
+    and None, not a bogus delta, when the counter is unavailable."""
+    from powergraph_spark import gas
+
     g = build(spark, PL_EDGES)
     res = pagerank(g, tol=0.0, max_iterations=4, audit_shuffle=True)
     vals = [m.extras.get("shuffle_write_bytes") for m in res.metrics]
@@ -436,6 +403,11 @@ def test_shuffle_audit_metrics(spark):
     # listener-bus lag can shift bytes between windows; the run as a
     # whole must have shuffled real state volume
     assert sum(vals) > 0
+
+    monkeypatch.setattr(gas, "total_shuffle_write_bytes", lambda spark: -1)
+    res = pagerank(g, tol=0.0, max_iterations=2, audit_shuffle=True)
+    vals = [m.extras["shuffle_write_bytes"] for m in res.metrics]
+    assert vals == [None, None]
 
 
 def test_aggregators_one_job_per_check(spark):

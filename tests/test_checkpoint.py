@@ -54,38 +54,35 @@ def test_resume_reproduces_uninterrupted_run(spark, tmp_path):
 
 
 def test_resume_from_wide_state_checkpoint(spark, tmp_path):
-    """Checkpoints written by the pre-slim (id, rank, out_deg, delta)
-    state layout must still resume in dataframe mode (normalized via
-    resume_transform), and a slim checkpoint resumed into csr mode —
-    which needs out_deg — must fail with a clear error (ADVICE r3)."""
+    """A checkpoint is input from outside the run: one written in the
+    wide (id, rank, out_deg, delta) layout must resume to the
+    uninterrupted ranks (run_gas selects the slim state's columns),
+    and one missing `rank` must fail with a clear error naming it
+    instead of an ambiguous AnalysisException mid-superstep."""
     import pytest
+
+    from powergraph_spark.gas import SuperstepMetrics
 
     edges = powerlaw_edges(200, seed=7)
     g = Graph.from_pandas(spark, edges, num_partitions=4)
     expected = _ranks(pagerank(g, tol=1e-9, max_iterations=12).state)
 
-    # produce a WIDE checkpoint (csr mode keeps out_deg in state)
+    # pagerank's public state after 3 supersteps IS the wide layout
+    wide = pagerank(g, tol=1e-9, max_iterations=3).state
+    assert wide.columns == ["id", "rank", "out_deg", "delta"]
     store = CheckpointStore(spark, str(tmp_path / "ck_wide"))
-    pagerank(g, tol=1e-9, max_iterations=12, mode="csr",
-             checkpoint=store, checkpoint_interval=1)
-    store.truncate_after(3)
-    wide_cols = store.latest()[1].columns
-    assert "out_deg" in wide_cols
-    resumed = pagerank(  # dataframe mode resumes the wide checkpoint
+    store.commit(3, wide, SuperstepMetrics(3, -1, None, 0.0))
+    resumed = pagerank(
         g, tol=1e-9, max_iterations=12, checkpoint=store,
         checkpoint_interval=1, resume=True,
     )
     assert _ranks(resumed.state) == expected
 
-    # slim checkpoint into csr mode: clear failure, not an ambiguous
-    # AnalysisException inside the superstep
-    store2 = CheckpointStore(spark, str(tmp_path / "ck_slim"))
-    pagerank(g, tol=1e-9, max_iterations=12,
-             checkpoint=store2, checkpoint_interval=1)
-    store2.truncate_after(3)
-    with pytest.raises(ValueError, match="out_deg"):
-        pagerank(g, tol=1e-9, max_iterations=12, mode="csr",
-                 checkpoint=store2, checkpoint_interval=1, resume=True)
+    store2 = CheckpointStore(spark, str(tmp_path / "ck_no_rank"))
+    store2.commit(3, wide.drop("rank"), SuperstepMetrics(3, -1, None, 0.0))
+    with pytest.raises(ValueError, match=r"lack \[.rank.\]"):
+        pagerank(g, tol=1e-9, max_iterations=12, checkpoint=store2,
+                 checkpoint_interval=1, resume=True)
 
 
 def test_resume_cc_exact(spark, tmp_path):

@@ -23,6 +23,12 @@ TABLES = [
 
 def _duck(sf_dir: str):
     con = duckdb.connect()
+    # DuckDB runs inside the pytest process and by default may take 80%
+    # of RAM. The ktruss oracle's unrolled triangle joins grew it to
+    # ~9 GB, and the kernel's OOM killer ended the whole test run. Under
+    # a 2 GB cap the same query returned the same rows in ~9 s at 1.4 GB
+    # peak RSS; 3 GB leaves headroom for the other oracles.
+    con.execute("SET memory_limit = '3GB'")
     for t in TABLES:
         p = os.path.join(sf_dir, f"{t}.parquet")
         if os.path.exists(p):
