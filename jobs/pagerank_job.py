@@ -4,7 +4,7 @@ Usage (north rule launch shape):
     python -m zipfile -c powergraph_spark.zip powergraph_spark
     spark-submit --py-files powergraph_spark.zip jobs/pagerank_job.py \
         --pages <pages parquet/iceberg path> --output <out path> \
-        [--tol 1e-6] [--partitions 4096] [--salt-cap 1000000] \
+        [--tol 1e-6] [--partitions 4096] \
         [--checkpoint <path>] [--resume]
 
 On a multi-executor cluster the same invocation scales from N to 4N
@@ -24,7 +24,6 @@ def main() -> None:
     ap.add_argument("--tol", type=float, default=1e-6)
     ap.add_argument("--max-iterations", type=int, default=200)
     ap.add_argument("--partitions", type=int, default=None)
-    ap.add_argument("--salt-cap", type=int, default=None)
     ap.add_argument("--checkpoint", default=None)
     ap.add_argument("--resume", action="store_true")
     ap.add_argument("--check-interval", type=int, default=5)
@@ -41,8 +40,7 @@ def main() -> None:
 
     spark = SparkSession.builder.appName("powergraph-pagerank").getOrCreate()
     pages = spark.read.parquet(args.pages)
-    g = pages_to_graph(pages, num_partitions=args.partitions,
-                       salt_cap=args.salt_cap)
+    g = pages_to_graph(pages, num_partitions=args.partitions)
     assert audit_collisions(g.vertices) == 0, "url hash collision"
     store = CheckpointStore(spark, args.checkpoint) if args.checkpoint else None
     if args.delta:

@@ -1,7 +1,7 @@
 """powergraph_spark — a from-scratch PySpark-native link-graph
 analytics engine with the capabilities of jegonzal/PowerGraph.
 
-Graph = two DataFrames (vertex-cut partitioned edges + vertex state);
+Graph = two DataFrames (edges hash-partitioned by src + vertex state);
 GAS supersteps = scatter join + gather aggregation + apply expression;
 flagship toolkits: PageRank, connected components, label propagation,
 triangle counting. See SURVEY.md for the full design.

@@ -104,11 +104,7 @@ def approx_diameter(
     Stops when the estimate stops growing (reference uses exact
     equality of consecutive estimates on converged masks; we stop when
     relative growth <= tol)."""
-    P = graph.num_partitions
-    edges = graph.edges.select("src", "dst").repartition(P, "src").persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    edges.count()
+    edges = graph.edges.select("src", "dst")
     state = _init_masks(graph.vertices, r).persist(StorageLevel.MEMORY_AND_DISK)
     history = [_fm_count(state, r)]
     hops = 0
@@ -151,6 +147,5 @@ def approx_diameter(
         if prev > 0 and (est - prev) / prev <= tol:
             hops = hop - 1
             break
-    edges.unpersist()
     state.unpersist()
     return hops, history

@@ -31,11 +31,14 @@ def top_eigenvector(
     """Returns ((id, value) unit eigenvector, eigenvalue estimate) of
     the (symmetrized) adjacency matrix. Deterministic init x0 = 1/sqrt(n).
     """
-    P = graph.num_partitions
-    edges = (graph.symmetrized_edges() if symmetric
-             else graph.edges.select("src", "dst"))
-    edges = edges.repartition(P, "src").persist(StorageLevel.MEMORY_AND_DISK)
-    edges.count()
+    if symmetric:
+        edges = graph.symmetrized_edges().repartition(
+            graph.num_partitions, "src"
+        ).persist(StorageLevel.MEMORY_AND_DISK)
+        edges.count()
+    else:
+        # the graph's own src-hashed cache: no copy to build or release
+        edges = graph.edges.select("src", "dst")
 
     n = graph.num_vertices()
     x = graph.vertices.select(
@@ -76,7 +79,8 @@ def top_eigenvector(
             break
         lam = new_lam
 
-    edges.unpersist()
+    if symmetric:
+        edges.unpersist()
     return x, lam
 
 

@@ -39,12 +39,7 @@ def hits(
     the normalized authority vector <= tol. Vertices with no in-links
     (out-links) get authority (hub) 0."""
     P = graph.num_partitions
-    edges = (
-        graph.edges.select("src", "dst")
-        .repartition(P, "src")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    edges.count()
+    edges = graph.edges.select("src", "dst")
     verts = graph.vertices.select("id").repartition(P, "id").persist(
         StorageLevel.MEMORY_AND_DISK
     )
@@ -104,6 +99,5 @@ def hits(
         .select("id", "hub", "auth")
         .localCheckpoint(eager=True)
     )
-    edges.unpersist()
     verts.unpersist()
     return out, it, converged

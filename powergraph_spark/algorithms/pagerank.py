@@ -21,10 +21,10 @@ pre/post_local_gather (ivertex_program.hpp:729-765), and is what makes
 hub in-degrees scale: each edge partition emits one partial sum per
 (partition, dst).
 
-Scale notes: each call shuffles the edge table once (repartition by
-src, persisted); every superstep shuffles only the vertex-state table
-(|V| rows, orders of magnitude smaller than |E| at web scale) plus
-the partially-aggregated contributions.
+Scale notes: the edge table is read from the graph's own src-hashed
+cache (Graph.from_edges) and never shuffles; every superstep shuffles
+only the vertex-state table (|V| rows, orders of magnitude smaller
+than |E| at web scale) plus the partially-aggregated contributions.
 """
 
 from __future__ import annotations
@@ -45,18 +45,13 @@ RESET_PROB = 0.15  # pagerank.cpp:31
 def _src_hashed_edges(
     graph: Graph, cols: list, norm_col: str, norm_agg: Column
 ) -> tuple[DataFrame, DataFrame]:
-    """The loop's edge layout plus its per-source normalizer.
+    """The loop's edge view plus its per-source normalizer.
 
-    Edges are hash-partitioned by src and persisted, so the
+    The view projects the graph's persisted src-hashed edges, so the
     per-superstep scatter join shuffles only the (small) vertex-state
     side. The normalizer (id, ``norm_col``) aggregates ``norm_agg``
     over each source's out-edges (out-degree or out-weight)."""
-    edges = (
-        graph.edges.select(*cols)
-        .repartition(graph.num_partitions, "src")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    edges.count()
+    edges = graph.edges.select(*cols)
     norm = edges.groupBy(F.col("src").alias("id")).agg(
         norm_agg.alias(norm_col)
     )
@@ -126,7 +121,7 @@ def _dense_pagerank(
         #
         # shuffle_hash hints: state, static, and edges are all
         # co-partitioned on the join key (state by id from the previous
-        # apply, static by id at setup, edges by src at setup), so both
+        # apply, static by id at setup, edges by src at ingest), so both
         # SHJs run with ZERO exchange. Without the hints AQE converts
         # these to broadcast joins — a DRIVER-SERIAL collect + rebuild
         # of |V| rows every superstep, which flatlines scaling
@@ -175,7 +170,6 @@ def _dense_pagerank(
         return result
     finally:
         static.unpersist()
-        edges.unpersist()
 
 
 def pagerank(
@@ -375,18 +369,15 @@ def _delta_pagerank(
                        f"END) * out_deg) > {tol} ELSE false END",
         },
     )
-    try:
-        return run_gas(
-            graph,
-            init,
-            step,
-            observe_aggs=lambda: [
-                F.sum(F.col("changed").cast("long")).alias("active")
-            ],
-            **loop,
-        )
-    finally:
-        edges.unpersist()
+    return run_gas(
+        graph,
+        init,
+        step,
+        observe_aggs=lambda: [
+            F.sum(F.col("changed").cast("long")).alias("active")
+        ],
+        **loop,
+    )
 
 
 def pagerank_delta(

@@ -67,9 +67,7 @@ def scc(
     remaining = _persist(
         graph.vertices.select("id").repartition(P, "id")
     )
-    edges = _persist(
-        graph.edges.select("src", "dst").repartition(P, "src")
-    )
+    edges = graph.edges.select("src", "dst")
 
     phases = 0
     while True:
@@ -260,6 +258,5 @@ def scc(
         out = out.unionAll(part)
     out = truncate_plan(out.select("id", F.col("scc").cast("long")))
     n_sccs = out.select("scc").distinct().count()
-    edges.unpersist()
     remaining.unpersist()
     return SCCResult(state=out, phases=phases, n_sccs=n_sccs)

@@ -5,12 +5,16 @@ EdgeData> (/root/reference/src/graphlab/graph/distributed_graph.hpp:103-312).
 Spark-first mapping (SURVEY.md §1.4):
 
 - ``edges(src BIGINT, dst BIGINT, [edge-data cols...], pid INT)`` —
-  each edge lives in exactly one partition (`pid`, vertex-cut).
+  hash-partitioned by src into ``num_partitions`` partitions and
+  persisted once at construction; ``pid`` is the row's partition index.
+  This is the graph's one edge layout: the superstep loops whose edge
+  view is a forward projection (pagerank, hits, approx_diameter, scc,
+  directed eigen) read this cache directly.
 - ``vertices(id BIGINT, [vertex-data cols...])`` — one row per vertex;
   master/mirror replication is *not* materialized: the scatter join
   replicates vertex state to edge partitions each superstep, which is
   exactly the reference's master->mirror synchronize
-  (/root/reference/src/graphlab/graph/distributed_graph.hpp:2846-2900)
+  (PowerGraph src/graphlab/graph/distributed_graph.hpp:2846-2900)
   executed as a shuffle.
 
 Structural rules enforced at construction (finalize() analog,
@@ -28,7 +32,22 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from .partition import assign_pid, replication_factor
+from .partition import replication_factor
+
+
+def _src_layout(
+    edges: DataFrame, num_partitions: int, dedup: bool = True
+) -> DataFrame:
+    """Hash ``edges`` by src into ``num_partitions`` partitions,
+    optionally drop duplicate (src, dst) pairs, and set ``pid`` to the
+    partition index. One exchange: duplicate pairs share a src, so the
+    dedup aggregate reuses the repartition's distribution. ``pid`` is
+    Spark's own partition expression, pmod(hash(src), P), so it equals
+    spark_partition_id() on every row."""
+    e = edges.drop("pid").repartition(num_partitions, "src")
+    if dedup:
+        e = e.dropDuplicates(["src", "dst"])
+    return e.withColumn("pid", F.pmod(F.hash("src"), F.lit(num_partitions)))
 
 
 @dataclass
@@ -51,29 +70,19 @@ class Graph:
         edges: DataFrame,
         vertices: DataFrame | None = None,
         num_partitions: int | None = None,
-        strategy: str = "grid",
-        salt_cap: int | None = None,
         drop_self_loops: bool = True,
         dedup: bool = True,
         persist: bool = True,
         src: str = "src",
         dst: str = "dst",
     ) -> "Graph":
-        """finalize(): self-loop filter -> pid -> repartition -> dedupe.
+        """finalize(): self-loop filter -> repartition by src -> dedupe.
 
-        ONE shuffle total (the pid repartition) — genuinely. The pid is
-        a pure function of (src, dst), so duplicate pairs always land
-        in the same partition, and the dedup (duplicate edges fail the
-        reference's finalization, local_graph.hpp:196-199) runs AFTER
-        the repartition as a partition-local window (sort within
-        partition + lag-compare): the window's required distribution
-        hashpartitioning(pid) is exactly what the repartition
-        produced, so Catalyst inserts no second exchange. A
-        dropDuplicates BEFORE the repartition would be a full extra
-        hash-agg exchange of the entire edge set — at 100 TB, a second
-        all-to-all as large as the ingest itself. (The 'identity'
-        strategy's pid is NOT a pair function, so it keeps the
-        up-front dedup.)
+        ONE shuffle total: ``hashpartitioning(src, P)``. Duplicate pairs
+        share a src, so they land in the same partition and the dedup
+        (duplicate edges fail the reference's finalization,
+        local_graph.hpp:196-199) is a partition-local hash aggregate
+        with no second exchange.
         """
         spark = edges.sparkSession
         P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -88,25 +97,7 @@ class Graph:
         if drop_self_loops:
             # self-edges are fatal in the reference (local_graph.hpp:341-346)
             e = e.filter(F.col("src") != F.col("dst"))
-        if dedup and strategy == "identity":
-            e = e.dropDuplicates(["src", "dst"])
-        e = assign_pid(e, P, strategy=strategy, salt_cap=salt_cap)
-        e = e.repartition(P, "pid")
-        if dedup and strategy != "identity":
-            from pyspark.sql import Window
-
-            w = Window.partitionBy("pid").orderBy("src", "dst")
-            e = (
-                e.withColumn("_ps", F.lag("src").over(w))
-                .withColumn("_pd", F.lag("dst").over(w))
-                .filter(
-                    ~(
-                        F.col("_ps").eqNullSafe(F.col("src"))
-                        & F.col("_pd").eqNullSafe(F.col("dst"))
-                    )
-                )
-                .drop("_ps", "_pd")
-            )
+        e = _src_layout(e, P, dedup)
         if persist:
             e = e.persist(StorageLevel.MEMORY_AND_DISK)
 
@@ -176,9 +167,9 @@ class Graph:
         """MLE of the degree-distribution power-law exponent
         (Clauset-Shalizi-Newman 2009 continuous approximation):
         alpha = 1 + n / Σ_{d >= dmin} ln(d / (dmin - 0.5)). The
-        diagnostic companion to load_synthetic_powerlaw / the skew
-        machinery — the measured alpha decides hub salting and skew
-        caps at ingest. One degree pass + one global aggregate.
+        diagnostic companion to load_synthetic_powerlaw: it describes
+        the degree skew a caller's graph carries. One degree pass + one
+        global aggregate.
         Returns (alpha, n_samples); alpha = inf when every sampled
         degree equals dmin (zero log-sum)."""
         col = {"out": "out_deg", "in": "in_deg"}[direction]

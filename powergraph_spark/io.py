@@ -18,8 +18,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
-from .graph import Graph
+from .graph import Graph, _src_layout
 
 FORMATS = ("snap", "tsv", "csv", "adj", "parquet")
 
@@ -116,10 +117,14 @@ def save_graph(graph: Graph, path: str) -> None:
 
 def load_saved_graph(spark: SparkSession, path: str,
                      num_partitions: int | None = None) -> Graph:
+    """Reload a save_graph snapshot into the src-hashed layout at
+    ``num_partitions``; ``pid`` is recomputed for the new parallelism.
+    Saved edges are already deduplicated."""
     e = spark.read.parquet(f"{path}/edges")
     v = spark.read.parquet(f"{path}/vertices")
     P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return Graph(edges=e.repartition(P, "pid"), vertices=v, num_partitions=P)
+    e = _src_layout(e, P, dedup=False).persist(StorageLevel.MEMORY_AND_DISK)
+    return Graph(edges=e, vertices=v, num_partitions=P)
 
 
 def synthetic_powerlaw(

@@ -1,318 +1,18 @@
-"""Vertex-cut edge partitioners as pure column expressions.
+"""Vertex-cut quality of the graph's edge layout.
 
 PowerGraph places each *edge* on exactly one machine and replicates
 *vertices* across every machine holding one of their edges (the
-vertex-cut; /root/reference/src/graphlab/graph/distributed_graph.hpp:251-274).
-We reproduce the same placement geometry as a deterministic `pid`
-column computed from (src, dst) — stateless, so Catalyst evaluates it
-inside the scan stage, and reproducible at any parallelism.
-
-Strategies (reference: --graph_opts ingress=X,
-/root/reference/src/graphlab/graph/distributed_graph.hpp:3179-3223):
-
-- ``random``: hash of the undirected pair
-  (/root/reference/src/graphlab/graph/ingress/distributed_random_ingress.hpp:40-70,
-  hash at graph/graph_hash.hpp:37-61).
-- ``grid``: constrained random — machines arranged in a k x k grid,
-  pid = cell (row(shard(src)), col(shard(dst))). Bounds each vertex's
-  replication to <= 2k-1 partitions
-  (/root/reference/src/graphlab/graph/ingress/distributed_constrained_random_ingress.hpp:40-95,
-  sharding_constraint.hpp). This is the engine default.
-- hub salting: the HDRF idea (favor splitting the higher-degree
-  endpoint, /root/reference/src/graphlab/graph/ingress/ingress_edge_decision.hpp:192-261)
-  expressed batch-wise — edges of a hub vertex are spread over
-  ``ceil(degree/cap)`` salted cells so no single task owns a hub's
-  full edge list (north-star requirement).
-
-The reference's sequential greedy strategies (oblivious/hdrf proper)
-are inherently stateful per-loader and not Spark-natural; grid+salt
-achieves the same goal (bounded replication, skew diffusion)
-declaratively. Documented non-goal per SURVEY.md §2.2.
-
-At 100 TB these expressions matter because they are *scan-stage*
-column computations: no shuffle is spent deciding placement, and the
-single ingest repartition(P, "pid") is the only data movement —
-exactly one all-to-all, same as the reference's edge exchange
-(/root/reference/src/graphlab/graph/ingress/distributed_ingress_base.hpp:130-140).
+vertex-cut; PowerGraph src/graphlab/graph/distributed_graph.hpp:251-274).
+Here the one edge layout is Spark's own hash partitioning by src
+(``Graph.from_edges``), and the ``pid`` column is that partition's
+index. A vertex's out-edges share one partition, so it spans at most
+1 + in-degree partitions.
 """
 
 from __future__ import annotations
 
-import math
-
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def grid_side(num_partitions: int) -> int:
-    """Smallest k with k*k >= num_partitions (grid side length)."""
-    return max(1, math.isqrt(max(1, num_partitions - 1)) + 1)
-
-
-def random_pid(src: Column, dst: Column, num_partitions: int) -> Column:
-    """hash_edge(min(s,t), max(s,t)) % P — reference random ingress.
-
-    /root/reference/src/graphlab/graph/ingress/ingress_edge_decision.hpp:49-56
-    """
-    lo, hi = F.least(src, dst), F.greatest(src, dst)
-    return F.pmod(F.xxhash64(lo, hi), F.lit(num_partitions)).cast("int")
-
-
-def grid_pid(src: Column, dst: Column, num_partitions: int) -> Column:
-    """Grid-constrained placement: cell (hash(src)%k, hash(dst)%k).
-
-    All edges out of vertex v land in row hash(v)%k; all edges into v
-    land in column hash(v)%k — v is replicated across at most 2k-1
-    cells. k*k may exceed num_partitions; pids are folded back with a
-    final pmod, which preserves the bound up to the fold.
-    """
-    k = grid_side(num_partitions)
-    row = F.pmod(F.xxhash64(F.lit(17), src), F.lit(k))
-    col = F.pmod(F.xxhash64(F.lit(31), dst), F.lit(k))
-    return F.pmod(row * k + col, F.lit(num_partitions)).cast("int")
-
-
-# ------------------------------------------------------------------ pds
-
-
-def _pds_set(p: int) -> list[int]:
-    """Perfect difference set mod n = p^2+p+1 for prime(-power) p: a
-    (p+1)-element set whose pairwise differences hit every nonzero
-    residue exactly once. Found as the zero positions of a degree-3
-    linear recurrence over GF(p) (Singer difference set construction;
-    reference: /root/reference/src/graphlab/util/generate_pds.hpp:29-104).
-    Driver-side, tiny (p <= ~31 in practice), memoizable."""
-    n = p * p + p + 1
-    if p == 1:
-        return [0, 2]
-    for a in range(p):
-        for b in range(p):
-            if a == 0 and b == 0:
-                continue
-            for c in range(1, p):
-                seq = [0, 0, 1]
-                zeros = [0, 1]
-                ok = True
-                for i in range(3, n + 2):
-                    v = (a * seq[-1] + b * seq[-2] + c * seq[-3]) % p
-                    seq.append(v)
-                    if v == 0 and i < n:
-                        zeros.append(i)
-                        if len(zeros) > p + 1:
-                            ok = False
-                            break
-                if not ok:
-                    continue
-                if seq[n] == 0 and seq[n + 1] == 0 and len(zeros) == p + 1:
-                    # verify the difference property
-                    count = [0] * n
-                    for x in zeros:
-                        for y in zeros:
-                            if x != y:
-                                count[(x - y) % n] += 1
-                    if all(c == 1 for c in count[1:]):
-                        return zeros
-    raise ValueError(f"no PDS found for p={p}")
-
-
-def pds_compatible(num_partitions: int) -> int | None:
-    """Returns p if num_partitions == p^2+p+1 for PRIME p (the GF(p)
-    recurrence construction needs a field; the reference's generator
-    has the same constraint and FATALs otherwise —
-    distributed_graph.hpp:3196, generate_pds.hpp:29-40). p=1 is the
-    reference's special case."""
-    def is_prime(x: int) -> bool:
-        if x < 2:
-            return False
-        return all(x % d for d in range(2, int(x ** 0.5) + 1))
-
-    p = 1
-    while p * p + p + 1 <= num_partitions:
-        if p * p + p + 1 == num_partitions and (p == 1 or is_prime(p)):
-            return p
-        p += 1
-    return None
-
-
-def pds_pid_map(spark, num_partitions: int) -> "DataFrame":
-    """(sa, sb, cands array<int>) lookup: the joint constraint
-    neighbors of shard pair (sa, sb). Constraint list of shard i =
-    {(s + i) mod n : s in PDS(p)} (sharding_constraint.hpp:141-162);
-    the PDS property guarantees every pair of lists intersects, so an
-    edge (u, v) places inside A_{shard(u)} ∩ A_{shard(v)} — vertex
-    replication is bounded by |A| = p+1 ≈ sqrt(n), vs 2*sqrt(n)-1 for
-    grid. The map has n^2 tiny rows -> broadcast join at ingest."""
-    p = pds_compatible(num_partitions)
-    if p is None:
-        raise ValueError(
-            f"pds needs num_partitions = p^2+p+1 (3, 7, 13, 21, 31, 57, "
-            f"73, 91, 133, ...); got {num_partitions}"
-        )
-    n = num_partitions
-    pds = _pds_set(p)
-    lists = [sorted((s + i) % n for s in pds) for i in range(n)]
-    rows = []
-    for a in range(n):
-        sa = set(lists[a])
-        for b in range(n):
-            joint = sorted(sa.intersection(lists[b]))
-            rows.append((a, b, joint))
-    return spark.createDataFrame(rows, "sa int, sb int, cands array<int>")
-
-
-def pds_assign(
-    edges: DataFrame, num_partitions: int, src: str = "src", dst: str = "dst"
-) -> DataFrame:
-    """Attach pid via the PDS constraint map (broadcast join; the pick
-    among joint candidates is the edge-hash, mirroring constrained
-    random ingress, distributed_constrained_random_ingress.hpp:40-95)."""
-    spark = edges.sparkSession
-    m = pds_pid_map(spark, num_partitions)
-    n = num_partitions
-    # ONE shard function for both endpoints (the reference's
-    # graph_hash master assignment): the p+1 bound needs a vertex's
-    # source-side and dst-side placements to draw from the SAME
-    # constraint list A_{s(v)}.
-    def shard(c: Column) -> Column:
-        return F.pmod(F.xxhash64(F.lit(17), c), F.lit(n)).cast("int")
-
-    e = edges.withColumn("_sa", shard(F.col(src))).withColumn(
-        "_sb", shard(F.col(dst))
-    )
-    joined = e.join(
-        F.broadcast(m),
-        (e["_sa"] == m["sa"]) & (e["_sb"] == m["sb"]),
-    )
-    lo, hi = F.least(F.col(src), F.col(dst)), F.greatest(F.col(src), F.col(dst))
-    pick = (F.pmod(F.xxhash64(lo, hi), F.size("cands")) + 1).cast("int")
-    return (
-        joined.withColumn("pid", F.element_at("cands", pick).cast("int"))
-        .drop("_sa", "_sb", "sa", "sb", "cands")
-    )
-
-
-def assign_pid(
-    edges: DataFrame,
-    num_partitions: int,
-    strategy: str = "grid",
-    salt_cap: int | None = None,
-    src: str = "src",
-    dst: str = "dst",
-) -> DataFrame:
-    """Attach the vertex-cut `pid` column, optionally salting hubs.
-
-    ``salt_cap``: if set, any source vertex with out-degree > salt_cap
-    has its edges spread over ceil(out_deg/cap) distinct grid columns
-    (and symmetrically for high in-degree destinations over rows), so
-    no partition owns more than ~cap of a hub's edges. The degree
-    computation is one extra aggregation at ingest time only — the pid
-    is then frozen into the edges table and reused every superstep.
-    """
-    if strategy == "pds":
-        if salt_cap is not None:
-            raise ValueError("salt_cap is a grid-strategy option")
-        return pds_assign(edges, num_partitions, src, dst)
-    if strategy == "degree":
-        return degree_assign(edges, num_partitions, salt_cap, src, dst)
-    if strategy == "random":
-        base = random_pid(F.col(src), F.col(dst), num_partitions)
-    elif strategy == "grid":
-        base = grid_pid(F.col(src), F.col(dst), num_partitions)
-    elif strategy == "identity":
-        # edges stay where parsed
-        # (/root/reference/src/graphlab/graph/ingress/distributed_identity_ingress.hpp)
-        return edges.withColumn("pid", F.spark_partition_id().cast("int"))
-    else:
-        raise ValueError(f"unknown partition strategy: {strategy}")
-
-    if salt_cap is None:
-        return edges.withColumn("pid", base)
-
-    out_deg = edges.groupBy(F.col(src).alias("_sid")).agg(
-        F.count(F.lit(1)).alias("_odeg")
-    )
-    in_deg = edges.groupBy(F.col(dst).alias("_did")).agg(
-        F.count(F.lit(1)).alias("_ideg")
-    )
-    k = grid_side(num_partitions)
-    e = (
-        edges.join(F.broadcast(out_deg.filter(F.col("_odeg") > salt_cap)),
-                   edges[src] == F.col("_sid"), "left")
-        .join(F.broadcast(in_deg.filter(F.col("_ideg") > salt_cap)),
-              edges[dst] == F.col("_did"), "left")
-    )
-    # salt offsets derived from the edge pair hash: deterministic,
-    # uniform over ceil(deg/cap) buckets.
-    salt_src = F.when(
-        F.col("_odeg").isNotNull(),
-        F.pmod(F.xxhash64(F.lit(101), F.col(src), F.col(dst)),
-               F.ceil(F.col("_odeg") / salt_cap)),
-    ).otherwise(F.lit(0))
-    salt_dst = F.when(
-        F.col("_ideg").isNotNull(),
-        F.pmod(F.xxhash64(F.lit(103), F.col(src), F.col(dst)),
-               F.ceil(F.col("_ideg") / salt_cap)),
-    ).otherwise(F.lit(0))
-    row = F.pmod(F.xxhash64(F.lit(17), F.col(src)) + salt_dst, F.lit(k))
-    col = F.pmod(F.xxhash64(F.lit(31), F.col(dst)) + salt_src, F.lit(k))
-    pid = F.pmod(row * k + col, F.lit(num_partitions)).cast("int")
-    return e.withColumn("pid", pid).drop("_sid", "_odeg", "_did", "_ideg")
-
-
-def degree_assign(
-    edges: DataFrame,
-    num_partitions: int,
-    salt_cap: int | None = None,
-    src: str = "src",
-    dst: str = "dst",
-) -> DataFrame:
-    """Batch 2-pass degree-aware placement — the HDRF/oblivious greedy
-    intent (replicate the HIGHER-degree endpoint,
-    /root/reference/src/graphlab/graph/ingress/ingress_edge_decision.hpp:192-261)
-    as a deterministic batch rule: every edge is homed on its
-    lower-total-degree endpoint's partition (ties: smaller vertex hash),
-    so a low-degree vertex's edges co-locate (replication -> 1 on its
-    home side) while a hub is spread across its neighbors' homes —
-    lower replication factor than grid on power-law graphs (tested).
-
-    Cost model vs grid: grid computes pid in the scan stage for free;
-    this strategy PAYS one degree aggregation plus two |V|-sized joins
-    at ingest (the second pass), exactly once — the same two-pass
-    trade the reference's greedy ingress makes, minus its sequential
-    placement state. ``salt_cap`` still applies: when the chosen home
-    vertex is itself a hub (hub-hub edges), its edge list is spread
-    over ceil(deg/cap) salted partitions so no task owns it whole.
-    """
-    deg = (
-        edges.select(F.col(src).alias("_v"))
-        .unionAll(edges.select(F.col(dst).alias("_v")))
-        .groupBy("_v")
-        .agg(F.count(F.lit(1)).alias("_deg"))
-    )
-    da = deg.select(F.col("_v").alias("_va"), F.col("_deg").alias("_da"))
-    db = deg.select(F.col("_v").alias("_vb"), F.col("_deg").alias("_db"))
-    e = edges.join(da, edges[src] == F.col("_va")).join(
-        db, edges[dst] == F.col("_vb")
-    )
-    s, d = F.col(src), F.col(dst)
-    a_first = (F.col("_da") < F.col("_db")) | (
-        (F.col("_da") == F.col("_db"))
-        & (F.xxhash64(F.lit(11), s) < F.xxhash64(F.lit(11), d))
-    )
-    home = F.when(a_first, s).otherwise(d)
-    home_deg = F.when(a_first, F.col("_da")).otherwise(F.col("_db"))
-    salt = (
-        F.when(
-            home_deg > salt_cap,
-            F.pmod(F.xxhash64(F.lit(107), s, d),
-                   F.ceil(home_deg / salt_cap)),
-        ).otherwise(F.lit(0))
-        if salt_cap is not None
-        else F.lit(0)
-    )
-    pid = F.pmod(F.xxhash64(F.lit(53), home) + salt,
-                 F.lit(num_partitions)).cast("int")
-    return e.withColumn("pid", pid).drop("_va", "_da", "_vb", "_db")
 
 
 def replication_factor(edges: DataFrame, src: str = "src", dst: str = "dst") -> float:

@@ -24,10 +24,10 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with engine defaults.
 
-    - AQE on: runtime partition coalescing + skew-join splitting is the
-      safety net behind our explicit vertex-cut partitioning (analog of
-      the balance term in the reference's greedy ingress,
-      /root/reference/src/graphlab/graph/ingress/ingress_edge_decision.hpp:95-96).
+    - AQE on: runtime partition coalescing and skew-join splitting.
+      The edge layout itself is a plain hash partitioning by src
+      (Graph.from_edges); PageRank's superstep reads that cache with no
+      edge exchange, so AQE has no edge shuffle to split there.
     - Arrow on: every Python-side kernel is Arrow-vectorized
       (input_hint: no per-row Python).
     - UTC session timezone: required for DuckDB-oracle comparison.

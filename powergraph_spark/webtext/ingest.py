@@ -7,8 +7,9 @@ Pipeline (one Spark job, SURVEY.md §7 Phase 1):
     -> link_pairs (vectorized href extraction)          [no shuffle]
     -> vertex ids: xxhash64(url)                        [analog of
        graph_hash::hash_vertex, /root/reference/src/graphlab/graph/graph_hash.hpp:32-34]
-    -> self-loop filter + (src,dst) dedup               [local_graph.hpp:341-346, :196-199]
-    -> grid pid + optional hub salting + repartition    [the single ingest all-to-all]
+    -> self-loop filter                                 [local_graph.hpp:341-346]
+    -> repartition by src + (src,dst) dedup             [the single ingest all-to-all;
+                                                         local_graph.hpp:196-199]
     -> vertices (id, url) from url universe
 
 Collision audit: xxhash64 on 10^12 urls has birthday-collision
@@ -17,6 +18,8 @@ expectation ~0.027 per 10^12 at 64 bits — audit_collisions() verifies
 """
 
 from __future__ import annotations
+
+import warnings
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -32,7 +35,6 @@ def url_id(col: F.Column) -> F.Column:
 def pages_to_graph(
     pages: DataFrame,
     num_partitions: int | None = None,
-    strategy: str = "grid",
     salt_cap: int | None = None,
 ) -> Graph:
     """The extracted link-pair table feeds BOTH the edge set and the
@@ -41,9 +43,19 @@ def pages_to_graph(
     per consumer (r6 opt, guide §2.3/§5): the graph's edge and vertex
     caches are materialized eagerly while the pair cache is hot, then
     the pair cache is dropped — the returned Graph is self-contained
-    (its own persisted edges/vertices) exactly as before."""
+    (its own persisted edges/vertices) exactly as before.
+
+    ``salt_cap`` is deprecated and ignored: the edge layout is
+    src-hashed (Graph.from_edges) and no longer salts hubs."""
     from pyspark.storagelevel import StorageLevel
 
+    if salt_cap is not None:
+        warnings.warn(
+            "pages_to_graph(salt_cap=...) is deprecated and ignored: the "
+            "edge layout is src-hashed and does not salt hubs",
+            DeprecationWarning,
+            stacklevel=2,
+        )
     pairs = link_pairs(pages).persist(StorageLevel.MEMORY_AND_DISK)
     edges = pairs.select(
         url_id(F.col("src_url")).alias("src"),
@@ -60,8 +72,6 @@ def pages_to_graph(
         edges,
         vertices=vertices,
         num_partitions=num_partitions,
-        strategy=strategy,
-        salt_cap=salt_cap,
     )
     # materialize the graph's own caches off the hot pair cache, then
     # release it (unpersist is safe either way: the lineage still

@@ -455,18 +455,49 @@ def test_pagerank_superstep_plan_no_broadcast_of_state(spark):
     """Slim-state pagerank keeps the zero-exchange discipline: the
     static out_deg join, the scatter join, and the contrib apply join
     are all shuffle-hash over the co-partitioned layout — never a
-    BroadcastExchange of vertex state."""
+    BroadcastExchange of vertex state. The edge side scans the graph's
+    own src-hashed cache (no private copy), and that cache survives
+    the call."""
+    from pyspark.storagelevel import StorageLevel
+
     plans: list[str] = []
+    scans: list[list] = []
+
+    def cache_scans(plan):
+        found, stack = [], [plan]
+        while stack:
+            node = stack.pop()
+            kind = node.getClass().getSimpleName()
+            if kind == "AdaptiveSparkPlanExec":
+                stack.append(node.executedPlan())
+                continue
+            if kind == "InMemoryTableScanExec":
+                found.append(node.relation())
+            kids = node.children()
+            stack.extend(kids.apply(i) for i in range(kids.size()))
+        return found
 
     def hook(df, step):
-        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        plan = df._jdf.queryExecution().executedPlan()
+        plans.append(plan.toString())
+        scans.append(cache_scans(plan))
 
     g = build(spark, PL_EDGES)
+    edges_cache = (
+        spark._jsparkSession.sharedState().cacheManager()
+        .lookupCachedData(g.edges._jdf).get().cachedRepresentation()
+    )
     pagerank(g, tol=0.0, max_iterations=3, plan_hook=hook)
     assert plans, "plan_hook never fired"
     for p in plans:
         assert "BroadcastExchange" not in p, p
         assert "ShuffledHashJoin" in p, p
+    for p, rels in zip(plans, scans):
+        own = [r for r in rels
+               if r.cacheBuilder().equals(edges_cache.cacheBuilder())]
+        assert own, p
+        assert "pid" in own[0].output().toString(), p
+    assert g.edges.storageLevel != StorageLevel.NONE
 
 
 def test_delta_engine_min_monoid_cc(spark):

@@ -76,6 +76,12 @@ def test_save_load_graph_roundtrip(spark, tmp_path):
     b = sorted((r["src"], r["dst"]) for r in g2.edges.collect())
     assert a == b
     assert g2.num_vertices() == g.num_vertices()
+    # the saved pids (from 4 partitions) are recomputed for 2
+    placed = g2.edges.select(
+        "pid", F.spark_partition_id().alias("part")
+    ).collect()
+    assert all(0 <= r["pid"] < 2 for r in placed), placed
+    assert all(r["pid"] == r["part"] for r in placed), placed
 
 
 def load_graph_fixture(spark, tmp_path):

@@ -1,12 +1,11 @@
-"""Tests for the pds partitioner, warp named API, Laplacian, and
-eigenvector normalization."""
+"""Tests for the warp named API, Laplacian, and eigenvector
+normalization."""
 
 from __future__ import annotations
 
 import math
 from collections import defaultdict
 
-import pytest
 from oracles import powerlaw_edges
 from pyspark.sql import functions as F
 
@@ -16,11 +15,6 @@ from powergraph_spark.algorithms import (
     top_eigenvector,
 )
 from powergraph_spark.graph import Graph
-from powergraph_spark.partition import (
-    _pds_set,
-    pds_compatible,
-    replication_factor,
-)
 from powergraph_spark.warp import (
     bond_percolation,
     broadcast_neighborhood,
@@ -33,88 +27,6 @@ EDGES = [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5), (5, 3), (2, 4), (6, 7)]
 
 def build(spark, edges, **kw):
     return Graph.from_pandas(spark, edges, **kw)
-
-
-# ------------------------------------------------------------------- pds
-def test_pds_set_difference_property():
-    for p in [2, 3, 5, 7]:  # prime p only (GF(p) construction)
-        n = p * p + p + 1
-        s = _pds_set(p)
-        assert len(s) == p + 1
-        diffs = defaultdict(int)
-        for a in s:
-            for b in s:
-                if a != b:
-                    diffs[(a - b) % n] += 1
-        assert all(diffs[d] == 1 for d in range(1, n)), p
-
-
-def test_pds_compatible():
-    assert pds_compatible(7) == 2
-    assert pds_compatible(13) == 3
-    assert pds_compatible(31) == 5
-    assert pds_compatible(21) is None  # p=4 not prime -> no GF(p) PDS
-    assert pds_compatible(16) is None
-
-
-def test_pds_replication_bound(spark):
-    # P = 31 = 5^2+5+1 -> every vertex replicates across <= p+1 = 6 pids
-    edges = powerlaw_edges(400, seed=3)
-    g = build(spark, edges, num_partitions=31, strategy="pds")
-    p = 5
-    ends = g.edges.select(F.col("src").alias("id"), "pid").unionAll(
-        g.edges.select(F.col("dst").alias("id"), "pid")
-    )
-    worst = (
-        ends.groupBy("id").agg(F.count_distinct("pid").alias("n"))
-        .agg(F.max("n")).first()[0]
-    )
-    assert worst <= p + 1
-    assert replication_factor(g.edges) <= p + 1
-    pids = [r["pid"] for r in g.edges.select("pid").distinct().collect()]
-    assert all(0 <= x < 31 for x in pids)
-
-
-def test_degree_aware_ingress_beats_grid(spark):
-    """The batch 2-pass degree-aware strategy (greedy-HDRF intent:
-    home each edge on its lower-degree endpoint) must achieve a lower
-    replication factor than grid on a power-law graph, stay balanced,
-    and respect the salt cap for hub homes."""
-    edges = powerlaw_edges(2000, seed=5)
-    g_grid = build(spark, edges, num_partitions=16, strategy="grid")
-    g_deg = build(spark, edges, num_partitions=16, strategy="degree")
-    r_grid = replication_factor(g_grid.edges)
-    r_deg = replication_factor(g_deg.edges)
-    assert r_deg < r_grid, (r_deg, r_grid)
-
-    # same edge multiset regardless of strategy
-    assert sorted(
-        (r["src"], r["dst"]) for r in g_deg.edges.collect()
-    ) == sorted((r["src"], r["dst"]) for r in g_grid.edges.collect())
-
-    # balance: no partition owns more than ~6x the mean edge share
-    # (power-law homes are hash-spread; exact uniformity not expected)
-    loads = [r["n"] for r in g_deg.edges.groupBy("pid")
-             .agg(F.count(F.lit(1)).alias("n")).collect()]
-    assert max(loads) <= 6 * (sum(loads) / len(loads)), loads
-
-    # salt cap: a hub-home's edges spread over multiple pids
-    g_salt = build(spark, edges, num_partitions=16, strategy="degree",
-                   salt_cap=20)
-    ends = g_salt.edges.select(F.col("src").alias("id"), "pid").unionAll(
-        g_salt.edges.select(F.col("dst").alias("id"), "pid")
-    )
-    deg_tbl = ends.groupBy("id").agg(
-        F.count(F.lit(1)).alias("deg"),
-        F.count_distinct("pid").alias("npid"),
-    )
-    hubs = deg_tbl.filter(F.col("deg") > 3 * 20).collect()
-    assert hubs and all(h["npid"] > 1 for h in hubs)
-
-
-def test_pds_rejects_incompatible(spark):
-    with pytest.raises(Exception, match="p\\^2\\+p\\+1"):
-        build(spark, EDGES, num_partitions=16, strategy="pds")
 
 
 # ------------------------------------------------------------------ warp

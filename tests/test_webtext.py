@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import math
 
+import pytest
 from oracles import cc_oracle, pagerank_oracle
 from pyspark.sql import functions as F
 
@@ -72,6 +73,26 @@ def test_link_graph_matches_expected_edges(spark):
     }
     got = {(r["src"], r["dst"]) for r in g.edges.select("src", "dst").collect()}
     assert got == exp
+
+
+def test_pages_to_graph_salt_cap_deprecated(spark):
+    """salt_cap is accepted for old callers, warns, and changes nothing:
+    same edges, same pid placement as a call without it."""
+    pages = _pages(spark)
+    with pytest.warns(DeprecationWarning, match=r"ignored.*src-hashed"):
+        salted = pages_to_graph(pages, num_partitions=4, salt_cap=64)
+    plain = pages_to_graph(pages, num_partitions=4)
+
+    def placed(g):
+        return sorted(
+            (r["src"], r["dst"], r["pid"])
+            for r in g.edges.select("src", "dst", "pid").collect()
+        )
+
+    assert placed(salted) == placed(plain)
+    assert len(placed(plain)) > 0
+    salted.unpersist()
+    plain.unpersist()
 
 
 def test_pagerank_on_web_graph_matches_oracle(spark):
