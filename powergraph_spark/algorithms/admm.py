@@ -516,7 +516,7 @@ def dd_map_admm(
             f"(a - b) * (a - b)), CAST(0.0 AS DOUBLE), "
             f"(acc, x) -> acc + x) / {dg}"
         )
-        new_state = (
+        return (
             ph
             .join(
                 qsum.selectExpr("v AS src", "pnew AS pn_s",
@@ -557,7 +557,6 @@ def dd_map_admm(
                  + sq("pn_d", "p_d", "deg_d")).alias("dres_part"),
             )
         )
-        return new_state, None
 
     result = run_gas(
         graph,
@@ -828,7 +827,7 @@ def dd_map_bethe(
             f"(a - b) * (a - b)), CAST(0.0 AS DOUBLE), "
             f"(acc, x) -> acc + x) / {dg}"
         )
-        new_state = (
+        return (
             ph
             .join(
                 qsum.selectExpr("v AS src", "pnew AS pn_s",
@@ -866,7 +865,6 @@ def dd_map_bethe(
                  + sq("pn_d", "p_d", "deg_d")).alias("dres_part"),
             )
         )
-        return new_state, None
 
     result = run_gas(
         graph,

@@ -337,7 +337,7 @@ def als(
             weighted=weighted,
             solver=user_solver if user_turn else item_solver,
         )
-        new_state = (
+        return (
             state.join(solved.withColumnRenamed("factor", "_nf")
                        .hint("shuffle_hash"), "id", "left")
             .select(
@@ -356,7 +356,6 @@ def als(
                 ).otherwise(F.col("residual")).alias("residual"),
             )
         )
-        return new_state, None
 
     edge_aggregators = None
     if with_rmse:
@@ -514,7 +513,7 @@ def sgd(
                 * (g - F.lit(lam) * F.col("n") * f),
             ),
         ).otherwise(F.col("factor"))
-        new_state = (
+        return (
             state.join(gu.unionAll(gi).hint("shuffle_hash"), "id", "left")
             .withColumn("_nf", upd)
             .select(
@@ -525,7 +524,6 @@ def sgd(
                 .alias("residual"),
             )
         )
-        return new_state, None
 
     edge_aggregators = None
     if with_rmse:

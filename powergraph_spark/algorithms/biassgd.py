@@ -160,7 +160,7 @@ def biassgd(
             F.col("bias") + F.lit(gi)
             * (F.col("bsum") - F.lit(lam) * F.col("n") * F.col("bias")),
         ).otherwise(F.col("bias"))
-        new_state = (
+        return (
             state.join(gu.unionAll(gv).hint("shuffle_hash"), "id", "left")
             .withColumn("_nf", upd_f)
             .withColumn("_nb", upd_b)
@@ -175,7 +175,6 @@ def biassgd(
                 ).alias("residual"),
             )
         )
-        return new_state, None
 
     edge_aggregators = None
     if with_rmse:

@@ -167,7 +167,7 @@ def cascades(
             # literal reference schedule: susceptibles were only active
             # in the signal-all round (cascades.cpp:153-157)
             infect_branch = ""
-        new_state = (
+        return (
             cur.join(k.hint("shuffle_hash"), "id", "left")
             .selectExpr("id", "status", "COALESCE(k, 0) AS kk")
             .selectExpr(
@@ -186,7 +186,6 @@ def cascades(
                 (F.col("new_status") != F.col("status")).alias("changed"),
             )
         )
-        return new_state, None
 
     result = run_gas(
         graph,

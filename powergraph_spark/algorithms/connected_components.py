@@ -104,7 +104,7 @@ def connected_components(
             .groupBy(F.col("dst").alias("id"))
             .agg(F.min("component").alias("received"))
         )
-        new_state = (
+        return (
             state.select("id", "component")
             .join(msgs.hint("shuffle_hash"), "id", "left")
             .select(
@@ -120,7 +120,6 @@ def connected_components(
                 (F.col("new_component") < F.col("component")).alias("changed"),
             )
         )
-        return new_state, lambda df: df.filter("changed").select("id")
 
     result = run_gas(
         graph,

@@ -258,7 +258,7 @@ def dual_decomposition_map(
             f"((CASE WHEN j = {fstar} THEN 1.0E0 ELSE 0.0E0 END) - "
             f"(CASE WHEN j = {xstar} THEN 1.0E0 ELSE 0.0E0 END)))"
         )
-        new_state = (
+        return (
             joined
             .withColumn("_fb", fb)
             .withColumn("_fidx", _argmax_first(F.col("_fb")))
@@ -280,7 +280,6 @@ def dual_decomposition_map(
                  + F.col("psh_d")).alias("primal_part"),
             )
         )
-        return new_state, None
 
     result = run_gas(
         graph,
@@ -459,7 +458,7 @@ def dd_map_projected(
             f"transform({lam}, (v, j) -> v + CAST({s_t!r} AS DOUBLE) * "
             f"({votes_c}[j] / {deg_c} - {loc}[j]))"
         )
-        new_state = (
+        return (
             ph
             .join(
                 votes.selectExpr("v AS src", "votes AS vo_s",
@@ -495,7 +494,6 @@ def dd_map_projected(
                  + F.col("psh_d")).alias("primal_part"),
             )
         )
-        return new_state, None
 
     result = run_gas(
         graph,

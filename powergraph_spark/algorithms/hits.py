@@ -5,12 +5,17 @@ is a good AUTHORITY if many good hubs link to it, a good HUB if it
 links to many good authorities — two interleaved power iterations
 (a = Aᵀh then h = Aa, each L2-normalized). The reference toolkit has
 no HITS; this extends the link-graph surface the same way
-personalized/weighted PageRank do, following top_eigenvector's proven
-plan style (eigen.py): each half-step is one mat-vec (scatter join +
-partial-agg sum) materialized via localCheckpoint, with the L2 norm
-folded back in as a literal so every projection stays
-whole-stage-codegen. Per iteration: 2 joins + 2 aggs + one tiny norm
-row per half-step — at 100 TB only (id, value) rows shuffle.
+personalized/weighted PageRank do.
+
+One iteration is one :func:`~powergraph_spark.gas.run_gas` superstep
+over the state (id, hub, auth, dauth). Each half-step is one mat-vec
+(scatter join + partial-agg sum) joined back onto the state and
+materialized once; its L2 norm is then read off the materialized rows
+and folded back in as a literal, so every projection stays
+whole-stage-codegen and the mat-vec never runs twice. Only (id, value)
+rows shuffle. ``dauth`` = |auth - previous auth| is the termination
+ballot: a vertex is active while it is NULL (first iteration) or
+above ``tol``.
 
 Classic update order (authorities from CURRENT hubs, hubs from the
 NEW authorities) — deterministic at any parallelism, replayable in
@@ -23,8 +28,8 @@ import math
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
+from ..gas import run_gas
 from ..graph import Graph
 
 
@@ -38,66 +43,63 @@ def hits(
     iterations run, converged?). Convergence: max per-vertex change of
     the normalized authority vector <= tol. Vertices with no in-links
     (out-links) get authority (hub) 0."""
-    P = graph.num_partitions
     edges = graph.edges.select("src", "dst")
-    verts = graph.vertices.select("id").repartition(P, "id").persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    verts.count()
 
-    def matvec(vec: DataFrame, col: str, key_in: str, key_out: str,
-               out: str) -> DataFrame:
-        """A (or Aᵀ) times vec: join on key_in, sum per key_out."""
+    def scaled(col: str, norm: float) -> str:
+        return f"{col} / {norm!r} AS {col}" if norm else col
+
+    def half_step(state: DataFrame, col: str, key_in: str, key_out: str,
+                  out: str) -> tuple[DataFrame, float]:
+        """state plus ``out`` = A (or Aᵀ) times state[col], materialized,
+        and the L2 norm of ``out`` read from the materialized rows."""
         contrib = (
             edges.join(
-                vec.selectExpr(f"id AS _j", f"{col} AS _x").hint(
+                state.selectExpr("id AS _j", f"{col} AS _x").hint(
                     "shuffle_hash"
                 ),
                 F.col(key_in) == F.col("_j"),
             )
             .groupBy(F.col(key_out).alias("id"))
-            .agg(F.sum("_x").alias(out))
+            .agg(F.sum("_x").alias("_s"))
         )
-        return (
-            verts.join(contrib.hint("shuffle_hash"), "id", "left")
-            .selectExpr("id", f"coalesce({out}, 0.0) AS {out}")
+        raw = (
+            state.join(contrib.hint("shuffle_hash"), "id", "left")
+            .selectExpr("*", f"coalesce(_s, 0.0) AS {out}")
+            .drop("_s")
+            .localCheckpoint(eager=True)
+        )
+        ss = raw.agg(F.sum(F.col(out) * F.col(out))).first()[0]
+        return raw, math.sqrt(float(ss or 0.0))
+
+    def step(g: Graph, state: DataFrame, i: int) -> DataFrame:
+        a, na = half_step(state.selectExpr("id", "hub", "auth AS _prev"),
+                          "hub", "src", "dst", "auth")
+        a = a.selectExpr("id", "_prev", scaled("auth", na))
+        h, nh = half_step(a, "auth", "dst", "src", "hub")
+        return h.selectExpr(
+            "id", scaled("hub", nh), "auth", "abs(auth - _prev) AS dauth"
         )
 
-    def normalized(vec: DataFrame, col: str) -> DataFrame:
-        ss = vec.agg(F.sum(F.col(col) * F.col(col))).first()[0]
-        norm = math.sqrt(float(ss or 0.0))
-        if norm == 0.0:
-            return vec.localCheckpoint(eager=True)
-        return vec.selectExpr(
-            "id", f"{col} / {norm!r} AS {col}"
-        ).localCheckpoint(eager=True)
-
-    h = verts.selectExpr("id", "CAST(1.0 AS DOUBLE) AS hub")
-    h = normalized(h, "hub")
-    a_prev: DataFrame | None = None
-    a = None
-    it = 0
-    converged = False
-    for it in range(1, max_iterations + 1):
-        a = normalized(matvec(h, "hub", "src", "dst", "auth"), "auth")
-        h = normalized(matvec(a, "auth", "dst", "src", "hub"), "hub")
-        if a_prev is not None:
-            delta = (
-                a.join(a_prev.selectExpr("id", "auth AS _p"), "id")
-                .agg(F.max(F.abs(F.col("auth") - F.col("_p"))))
-                .first()[0]
-            )
-            if verbose:
-                print(f"[hits] it={it} max|Δauth|={delta:.3e}")
-            if delta is not None and float(delta) <= tol:
-                converged = True
-                a_prev = a
-                break
-        a_prev = a
-    out = (
-        h.join(a, "id")
-        .select("id", "hub", "auth")
-        .localCheckpoint(eager=True)
+    # the uniform hub vector, L2-normalized; auth starts NULL so the
+    # first iteration always votes active
+    n = graph.num_vertices()
+    hub0 = 1.0 / math.sqrt(n) if n else 0.0
+    init = graph.vertices.select("id").repartition(
+        graph.num_partitions, "id"
+    ).selectExpr(
+        "id",
+        f"CAST({hub0!r} AS DOUBLE) AS hub",
+        "CAST(NULL AS DOUBLE) AS auth",
+        "CAST(NULL AS DOUBLE) AS dauth",
     )
-    verts.unpersist()
-    return out, it, converged
+    result = run_gas(
+        graph, init, step,
+        observe_aggs=lambda: [
+            F.expr(f"count_if(dauth IS NULL OR dauth > {float(tol)!r})")
+            .alias("active"),
+            F.max("dauth").alias("metric"),
+        ],
+        max_iterations=max_iterations, verbose=verbose,
+    )
+    return (result.state.select("id", "hub", "auth"), result.supersteps,
+            result.converged)

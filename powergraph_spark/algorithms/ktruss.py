@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from ..graph import Graph
+from .triangle_count import _und_edges
 
 
 def _edge_support(und: DataFrame) -> DataFrame:
@@ -98,18 +99,12 @@ def ktruss(
     edge's triangle support inside the truss — and the number of peel
     rounds run). k >= 2; k=2 keeps every (self-loop-free) edge.
     ``canonical_edges=True`` asserts the edge rows are already strictly
-    src < dst and unique, skipping the setup dedup exchange (same
-    contract as triangle_count._oriented)."""
+    src < dst and unique, skipping the setup dedup exchange; it is
+    checked (see triangle_count._und_edges)."""
     if k < 2:
         raise ValueError("k-truss requires k >= 2")
     need = k - 2
-    cur = graph.edges.select(
-        F.least("src", "dst").alias("a"),
-        F.greatest("src", "dst").alias("b"),
-    ).filter(F.col("a") != F.col("b"))
-    if not canonical_edges:
-        cur = cur.dropDuplicates(["a", "b"])
-    cur = cur.localCheckpoint(eager=True)
+    cur = _und_edges(graph, canonical_edges).localCheckpoint(eager=True)
     rounds = 0
     sup = _edge_support(cur).persist(StorageLevel.MEMORY_AND_DISK)
     while rounds < max_rounds:

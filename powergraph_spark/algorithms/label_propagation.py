@@ -81,7 +81,7 @@ def label_propagation(
             F.min(F.struct((-F.col("cnt")).alias("neg_cnt"),
                            F.col("nbr_label").alias("lbl"))).alias("b")
         ).select("id", F.col("b.lbl").alias("best_label"))
-        new_state = (
+        return (
             cur.join(best.hint("shuffle_hash"), "id", "left")
             .select(
                 "id",
@@ -94,7 +94,6 @@ def label_propagation(
                 (F.col("new_label") != F.col("label")).alias("changed"),
             )
         )
-        return new_state, lambda df: df.filter("changed").select("id")
 
     result = run_gas(
         graph,

@@ -203,7 +203,7 @@ def lbp(
         damp = lambda old, new: F.zip_with(  # noqa: E731
             old, new, lambda o, n: d * o + (F.lit(1.0) - d) * n
         )
-        new_state = (
+        return (
             joined
             .withColumn("_n_sd", damp(F.col("m_sd"), nm_sd))
             .withColumn("_n_ds", damp(F.col("m_ds"), nm_ds))
@@ -215,7 +215,6 @@ def lbp(
                 _l1(F.col("_n_ds"), F.col("m_ds")).alias("res_ds"),
             )
         )
-        return new_state, None
 
     result = run_gas(
         graph,

@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..graph import Graph
-from .summary import _und_degrees, _und_edges
+from .triangle_count import _und_degrees, _und_edges
 
 
 def link_scores(

@@ -245,7 +245,7 @@ def mplp_map(
             )
             .withColumn("_rep", rep)
         )
-        new_state = (
+        return (
             joined
             .withColumn("_ds", new_del_s)
             .withColumn("_dd", new_del_d)
@@ -279,7 +279,6 @@ def mplp_map(
                  + F.col("psh_d")).alias("primal_part"),
             )
         )
-        return new_state, None
 
     result = run_gas(
         graph,

@@ -141,7 +141,7 @@ def nmf(
                 lambda f, r: F.greatest(f * r, F.lit(EPSILON)),
             )
         )
-        new_state = (
+        return (
             state.join(grad.hint("shuffle_hash"), "id", "left")
             .select(
                 "id",
@@ -150,7 +150,6 @@ def nmf(
                 "is_user",
             )
         )
-        return new_state, None
 
     edge_aggregators = None
     if with_rmse:

@@ -137,7 +137,7 @@ def _dense_pagerank(
             .groupBy(F.col("dst").alias("id"))
             .agg(F.sum(message).alias("gathered"))
         )
-        new_state = state.join(
+        return state.join(
             contrib.hint("shuffle_hash"), "id", "left"
         ).selectExpr(
             "id",
@@ -145,7 +145,6 @@ def _dense_pagerank(
             f"{upd} AS rank",
             f"abs(({upd}) - rank) AS delta",
         )
-        return new_state, None
 
     # convergence is observed on the superstep's own materialization
     # job (DataFrame.observe -> accumulators): zero extra jobs/scans.

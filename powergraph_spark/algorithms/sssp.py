@@ -74,7 +74,7 @@ def sssp(
             .groupBy(F.col("dst").alias("id"))
             .agg(F.min(F.col("dist") + F.col("w")).alias("cand"))
         )
-        new_state = (
+        return (
             state.select("id", "dist")
             .join(msgs.hint("shuffle_hash"), "id", "left")
             .select(
@@ -88,7 +88,6 @@ def sssp(
                 (F.col("nd") < F.col("dist")).alias("changed"),
             )
         )
-        return new_state, lambda df: df.filter("changed").select("id")
 
     result = run_gas(
         graph, init, step,

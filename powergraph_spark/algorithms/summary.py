@@ -31,33 +31,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..graph import Graph
-from .triangle_count import triangle_count, triangle_total
-
-
-def _und_edges(graph: Graph, canonical_edges: bool = False) -> DataFrame:
-    """Undirected dedup edge list as (a < b), self-loops dropped.
-
-    ``canonical_edges=True`` asserts the graph's edge rows already
-    satisfy src < dst with unique (src, dst) — then least/greatest is
-    the identity, the dedup exchange removes nothing and is skipped
-    (r6 opt, guide §2.4; same contract as
-    triangle_count._oriented(canonical_edges=True))."""
-    und = graph.edges.select(
-        F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-    ).filter(F.col("a") != F.col("b"))
-    if not canonical_edges:
-        und = und.dropDuplicates(["a", "b"])
-    return und
-
-
-def _und_degrees(und: DataFrame) -> DataFrame:
-    """(id, deg) over the undirected dedup edge list."""
-    return (
-        und.select(F.col("a").alias("id"))
-        .unionAll(und.select(F.col("b").alias("id")))
-        .groupBy("id")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
+from .triangle_count import (
+    _und_degrees,
+    _und_edges,
+    triangle_count,
+    triangle_total,
+)
 
 
 def local_clustering_coefficients(

@@ -153,7 +153,7 @@ def svdpp(
                     "vsum", lambda x: x / F.sqrt(F.col("_deg"))
                 ).alias("_nw"),
             )
-            new_state = (
+            return (
                 state.join(new_w.hint("shuffle_hash"), "id", "left")
                 .select(
                     "id", "factor",
@@ -164,7 +164,6 @@ def svdpp(
                     "bias", "is_user",
                 )
             )
-            return new_state, None
 
         # PHASE2: Jacobi sum of the per-train-edge deltas
         uf = state.filter("is_user").selectExpr(
@@ -245,7 +244,7 @@ def svdpp(
             .selectExpr("dst AS id", "dfac", "dwt", "dbias")
         )
         upd = u_upd.unionByName(i_upd)
-        new_state = (
+        return (
             state.join(upd.hint("shuffle_hash"), "id", "left")
             .select(
                 "id",
@@ -264,7 +263,6 @@ def svdpp(
                 "is_user",
             )
         )
-        return new_state, None
 
     result = run_gas(
         graph,

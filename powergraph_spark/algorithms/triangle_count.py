@@ -32,8 +32,9 @@ from pyspark.storagelevel import StorageLevel
 from ..graph import Graph
 
 
-def _oriented(graph: Graph, canonical_edges: bool = False) -> DataFrame:
-    """Undirected edges oriented lo->hi by (total degree, id).
+def _und_edges(graph: Graph, canonical_edges: bool = False) -> DataFrame:
+    """The one undirected view: edges as (a < b), self-loops dropped,
+    reciprocal pairs collapsed by a dedup on (a, b).
 
     ``canonical_edges=True`` is a caller assertion that every edge row
     already satisfies src < dst with (src, dst) unique — what
@@ -43,24 +44,46 @@ def _oriented(graph: Graph, canonical_edges: bool = False) -> DataFrame:
     exchange + hash-agg of the edge set that removes nothing, so it is
     skipped (r6 opt, guide §2.4 "a distinct on data that is already
     unique"; measured −35 % on the warm total-count pipeline at sf0.1,
-    identical totals). Generic directed inputs MUST keep the default:
-    a reciprocal pair (u,v),(v,u) maps to one (a,b) and has to collapse.
+    identical totals). The assertion is checked with one count over
+    the cached ``graph.edges``: a row with src > dst raises ValueError,
+    since its reciprocal pair would otherwise be counted twice
+    (ingest already drops self-loops and duplicate rows).
     """
+    if canonical_edges:
+        n_bad = graph.edges.filter(F.col("src") > F.col("dst")).count()
+        if n_bad:
+            raise ValueError(
+                f"canonical_edges=True, but {n_bad} edge rows have "
+                "src > dst; pass canonical_edges=False to dedup "
+                "reciprocal pairs"
+            )
     und = graph.edges.select(
         F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
     ).filter(F.col("a") != F.col("b"))
     if not canonical_edges:
         und = und.dropDuplicates(["a", "b"])
-        # NOT persisted on purpose: Catalyst's ReusedExchange already
-        # serves the three consumers from one dedup shuffle, and an
-        # explicit cache was MEASURED SLOWER (11.2 vs 8.2 s at sf0.1 —
-        # materializing the cache blocks exchange reuse/pipelining)
-    deg = (
+    return und
+
+
+def _und_degrees(und: DataFrame) -> DataFrame:
+    """(id, deg) over the undirected dedup edge list."""
+    return (
         und.select(F.col("a").alias("id"))
         .unionAll(und.select(F.col("b").alias("id")))
         .groupBy("id")
         .agg(F.count(F.lit(1)).alias("deg"))
     )
+
+
+def _oriented(graph: Graph, canonical_edges: bool = False) -> DataFrame:
+    """Undirected edges oriented lo->hi by (total degree, id).
+    ``canonical_edges``: see :func:`_und_edges`."""
+    # NOT persisted on purpose: Catalyst's ReusedExchange already
+    # serves the three consumers from one dedup shuffle, and an
+    # explicit cache was MEASURED SLOWER (11.2 vs 8.2 s at sf0.1 —
+    # materializing the cache blocks exchange reuse/pipelining)
+    und = _und_edges(graph, canonical_edges)
+    deg = _und_degrees(und)
     da, db = deg.alias("da"), deg.alias("db")
     e = (
         und.join(da, und.a == F.col("da.id"))

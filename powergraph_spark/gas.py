@@ -12,14 +12,16 @@ Reproduces the semantics of the reference's synchronous engine
                                            -> delta/changed-based active set
   5. aggregator tick + snapshot_interval   -> per-superstep metrics + checkpoint
 
+One superstep contract: ``step_fn(graph, state, i)`` returns the new
+state DataFrame, and the caller's ``observe_aggs`` (an ``active``
+count plus an optional ``metric``) is the only termination ballot.
 Termination: active set empty (TASK_DEPLETION,
-synchronous_engine.hpp:1359-1368), max_iterations, or timeout
-(engine options at synchronous_engine.hpp:986-1059).
+synchronous_engine.hpp:1359-1368) or max_iterations.
 
 Execution discipline (measured, see BENCH notes): each superstep is
 materialized EXACTLY ONCE — either by a durable checkpoint commit or
-by an eager localCheckpoint — and the frontier/convergence checks then
-run against the materialized RDD (cheap scans). This both truncates
+by an eager localCheckpoint — and the ballot rides that job through
+``DataFrame.observe``. This both truncates
 the logical plan every superstep (the #1 Spark iterative-loop pitfall:
 unbounded lineage) and avoids the cache-miss re-execution blowup that
 a persist-only chain exhibits under AQE. A superstep's plan is a
@@ -33,6 +35,7 @@ from __future__ import annotations
 
 import json
 import time
+import warnings
 from dataclasses import dataclass, field
 from typing import Callable
 
@@ -41,11 +44,6 @@ from pyspark.sql import functions as F
 
 from .checkpoint import CheckpointStore
 from .graph import Graph
-
-# step_fn returns (new_state, frontier_builder | None); the builder is
-# applied to the MATERIALIZED state so frontier counting never re-runs
-# the superstep plan.
-FrontierFn = Callable[[DataFrame], DataFrame]
 
 
 def truncate_plan(df: DataFrame) -> DataFrame:
@@ -71,8 +69,9 @@ def truncate_plan(df: DataFrame) -> DataFrame:
     Loops that rely on that (pagerank's slim-state gather) keep the
     plain localCheckpoint; loops whose state re-enters through multiple
     shuffle branches (lbp) opt in via run_gas(origin_free_checkpoint=
-    True). Falls back to the plain localCheckpoint if the private
-    internalCreateDataFrame bridge is unavailable.
+    True). Falls back to the plain localCheckpoint, with a
+    RuntimeWarning naming the error, if the private
+    internalCreateDataFrame bridge fails.
     """
     d2 = df.localCheckpoint(eager=True)
     if not _ORIGIN_FREE_BRIDGE:
@@ -84,15 +83,22 @@ def truncate_plan(df: DataFrame) -> DataFrame:
             jrdd, d2._jdf.schema(), False
         )
         return DataFrame(jdf, spark)
-    except Exception:
+    except Exception as exc:
+        warnings.warn(
+            "truncate_plan: the origin-free checkpoint bridge failed "
+            f"({type(exc).__name__}: {exc}); falling back to a plain "
+            "localCheckpoint, whose plans keep the origin chain",
+            RuntimeWarning,
+            stacklevel=2,
+        )
         return d2
 
 
 # Test seam (tests/test_graph.py pins both paths): setting this False
-# forces the plain-localCheckpoint fallback, which is correct but
-# re-exposes the origin-chain optimizer cost documented above. A loud
-# bridge-liveness test guards against a Spark upgrade silently
-# demoting every origin_free_checkpoint loop to the fallback.
+# forces the plain-localCheckpoint fallback without a warning; it is
+# correct but re-exposes the origin-chain optimizer cost documented
+# above. A loud bridge-liveness test guards against a Spark upgrade
+# silently demoting every origin_free_checkpoint loop to the fallback.
 _ORIGIN_FREE_BRIDGE = True
 
 
@@ -122,7 +128,7 @@ class GASResult:
     state: DataFrame
     supersteps: int
     converged: bool
-    termination: str  # TASK_DEPLETION | MAX_ITERATIONS | TIMEOUT
+    termination: str  # TASK_DEPLETION | MAX_ITERATIONS
     metrics: list[SuperstepMetrics]
 
 
@@ -133,7 +139,6 @@ def make_delta_step(
     emit_expr: str,
     merge_exprs: dict[str, str],
     monoid: str = "sum",
-    hint: str = "shuffle_hash",
 ):
     """ENGINE-LEVEL gather cache / delta execution for ANY vertex
     program — the generalization of the reference's per-vertex gather
@@ -179,14 +184,13 @@ def make_delta_step(
             "id", f"{emit_expr} AS d"
         )
         msgs = (
-            edges.join(frontier.hint(hint), edges.src == F.col("id"))
+            edges.join(frontier.hint("shuffle_hash"), edges.src == F.col("id"))
             .groupBy(F.col("dst").alias("id"))
             .agg(agg("d").alias("din"))
         )
-        new_state = state.join(msgs.hint(hint), "id", "left").selectExpr(
+        return state.join(msgs.hint("shuffle_hash"), "id", "left").selectExpr(
             "id", *out_cols
         )
-        return new_state, None
 
     return step
 
@@ -245,13 +249,11 @@ def _eval_aggregators(df: DataFrame, aggs: dict[str, list] | None) -> dict:
 def run_gas(
     graph: Graph,
     init_state: DataFrame,
-    step_fn: Callable[[Graph, DataFrame, int], tuple[DataFrame, FrontierFn | None]],
+    step_fn: Callable[[Graph, DataFrame, int], DataFrame],
     *,
-    convergence_fn: Callable[[DataFrame, DataFrame], tuple[int, float]] | None = None,
-    observe_aggs: Callable[[], list[Column]] | None = None,
+    observe_aggs: Callable[[], list[Column]],
     tol: float = 0.0,
     max_iterations: int = 100,
-    timeout_sec: float | None = None,
     checkpoint: CheckpointStore | None = None,
     checkpoint_interval: int = 1,
     check_interval: int = 1,
@@ -265,21 +267,17 @@ def run_gas(
 ) -> GASResult:
     """Run the superstep loop to TASK_DEPLETION / max_iterations.
 
-    ``step_fn(graph, state, i) -> (new_state, frontier_fn_or_None)``
-        one gather-apply-scatter superstep as DataFrame ops;
-        ``frontier_fn(materialized_state)`` returns the slim active set
-        whose emptiness terminates the loop (signal semantics).
-    ``convergence_fn(old_state, new_state) -> (active_count, metric)``
-        used when step_fn returns no frontier builder: delta-based
-        convergence (scatter's signal-if-|delta|>tol, pagerank.cpp:
-        124-135). Terminates when active_count == 0 or metric <= tol.
-    ``observe_aggs() -> [Column, ...]`` FREE convergence: aggregate
-        expressions attached to the superstep's own materialization job
-        via ``DataFrame.observe`` (accumulator-based — no extra scan,
-        no extra job). The first column must be aliased ``active``
-        (count of still-active vertices); an optional second aliased
-        ``metric`` (e.g. max delta). Takes precedence over frontier_fn
-        and convergence_fn when provided. This is the analog of the
+    ``step_fn(graph, state, i) -> new_state``
+        one gather-apply-scatter superstep as DataFrame ops. Anything
+        but a DataFrame (e.g. an old-style ``(state, frontier)`` tuple)
+        raises TypeError.
+    ``observe_aggs() -> [Column, ...]`` the termination ballot:
+        aggregate expressions attached to the superstep's own
+        materialization job via ``DataFrame.observe`` (accumulator-based
+        — no extra scan, no extra job). One column must be aliased
+        ``active`` (count of still-active vertices); an optional one
+        aliased ``metric`` (e.g. max delta) is recorded, and ends the
+        run when ``tol > 0`` and ``metric <= tol``. The analog of the
         reference engine folding its termination ballot into the
         superstep barrier instead of running a second pass.
     ``check_interval=k`` evaluates termination only every k supersteps
@@ -308,7 +306,6 @@ def run_gas(
     _ckpt = truncate_plan if origin_free_checkpoint else (
         lambda df: df.localCheckpoint(eager=True)
     )
-    t_start = time.time()
     state = _ckpt(init_state)
     start_step = 0
 
@@ -343,7 +340,13 @@ def run_gas(
     )
     while i < max_iterations:
         t0 = time.time()
-        new_state, frontier_fn = step_fn(graph, state, i)
+        new_state = step_fn(graph, state, i)
+        if not isinstance(new_state, DataFrame):
+            raise TypeError(
+                "step_fn(graph, state, i) must return the new state "
+                f"DataFrame, got {type(new_state).__name__}; the "
+                "termination ballot is run_gas(observe_aggs=...)"
+            )
         i += 1
         check_due = i % check_interval == 0 or i >= max_iterations
         if plan_hook is not None:
@@ -351,9 +354,9 @@ def run_gas(
             # BroadcastExchange of vertex state appears in a superstep)
             plan_hook(new_state, i)
 
-        # free convergence metrics: piggyback on the materialization job
+        # the ballot piggybacks on the materialization job
         obs: Observation | None = None
-        if observe_aggs is not None and check_due:
+        if check_due:
             obs = Observation()
             new_state = new_state.observe(obs, *observe_aggs())
 
@@ -366,23 +369,18 @@ def run_gas(
             new_state = _ckpt(new_state)
         state = new_state
 
-        # termination check (free via observe; else cheap scans over
-        # the materialized state)
         if check_due:
-            if obs is not None:
-                vals = obs.get
-                n_active = int(vals.get("active") or 0)
-                metric = (
-                    float(vals["metric"]) if vals.get("metric") is not None
-                    else float(n_active)
+            vals = obs.get
+            if "active" not in vals:
+                raise ValueError(
+                    "observe_aggs must alias one column 'active', got "
+                    f"{sorted(vals)}"
                 )
-            elif frontier_fn is not None:
-                n_active = frontier_fn(state).count()
-                metric = float(n_active)
-            elif convergence_fn is not None:
-                n_active, metric = convergence_fn(None, state)
-            else:
-                n_active, metric = state.count(), float("inf")
+            n_active = int(vals.get("active") or 0)
+            metric = (
+                float(vals["metric"]) if vals.get("metric") is not None
+                else float(n_active)
+            )
 
             # ONE agg job over state and one over the edge view per
             # check, regardless of how many named aggregators are
@@ -412,9 +410,6 @@ def run_gas(
                 if checkpoint is not None and not durable_due:
                     state = checkpoint.commit(i, state, m)
                 break
-        if timeout_sec is not None and time.time() - t_start > timeout_sec:
-            termination = "TIMEOUT"
-            break
 
     return GASResult(
         state=state,

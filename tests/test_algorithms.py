@@ -210,6 +210,52 @@ def test_triangles_canonical_fast_path_identical(spark):
     assert round(a_fast, 6) == round(a_base, 6)
 
 
+def test_canonical_fast_path_identical_ktruss_links_modularity(spark):
+    """The other three consumers of the canonical undirected view give
+    the same rows with canonical_edges=True on a canonical edge set."""
+    from powergraph_spark.algorithms.ktruss import ktruss
+    from powergraph_spark.algorithms.link_prediction import link_scores
+    from powergraph_spark.algorithms.summary import modularity
+
+    canon = sorted({(min(a, b), max(a, b)) for a, b in PL_EDGES if a != b})
+    g = build(spark, canon)
+    fast, fast_rounds = ktruss(g, 3, canonical_edges=True)
+    base, base_rounds = ktruss(g, 3)
+    assert fast_rounds == base_rounds
+    assert sorted(map(tuple, fast.collect())) == sorted(
+        map(tuple, base.collect())
+    )
+    # aa is an order-dependent float sum (see the assortativity note
+    # above): exact on the integer columns and jacc, 1e-12 on aa
+    fast = sorted(map(tuple, link_scores(g, canonical_edges=True).collect()))
+    base = sorted(map(tuple, link_scores(g).collect()))
+    assert [(a, b, cn, j) for a, b, cn, _, j in fast] == [
+        (a, b, cn, j) for a, b, cn, _, j in base
+    ]
+    assert [r[3] for r in fast] == pytest.approx([r[3] for r in base],
+                                                 rel=1e-12)
+    labels = g.vertices.selectExpr("id", "id % 5 AS label")
+    assert (
+        modularity(g, labels, canonical_edges=True).collect()
+        == modularity(g, labels).collect()
+    )
+
+
+def test_canonical_edges_rejects_reciprocal_pairs(spark):
+    """canonical_edges=True on edges that are not src < dst raises
+    instead of counting the reciprocal pair (1, 2), (2, 1) twice."""
+    from powergraph_spark.algorithms.ktruss import ktruss
+    from powergraph_spark.algorithms.triangle_count import triangle_total
+
+    g = build(spark, [(1, 2), (2, 1), (2, 3), (1, 3)])
+    with pytest.raises(ValueError, match="canonical_edges"):
+        ktruss(g, 3, canonical_edges=True)
+    with pytest.raises(ValueError, match="canonical_edges"):
+        triangle_total(g, canonical_edges=True)
+    out, _ = ktruss(g, 3)
+    assert sorted(map(tuple, out.collect())) == [(1, 2, 1), (1, 3, 1), (2, 3, 1)]
+
+
 # -------------------------------------------------- parallelism invariance
 def test_parallelism_invariance(spark):
     """Identical results across different pid counts (the reference's
@@ -421,15 +467,18 @@ def test_aggregators_one_job_per_check(spark):
     init = g.vertices.select("id", F.lit(3).alias("x"))
 
     def step(graph, state, i):
-        ns = state.selectExpr("id", "x - 1 AS x")
-        return ns, lambda df: df.filter("x > 0").select("id")
+        return state.selectExpr("id", "x - 1 AS x")
 
     def run(aggs, tag):
         sc = spark.sparkContext
         sc.setJobGroup(tag, tag)
         try:
-            res = run_gas(g, init, step, max_iterations=10,
-                          aggregators=aggs)
+            res = run_gas(
+                g, init, step, max_iterations=10, aggregators=aggs,
+                observe_aggs=lambda: [
+                    F.sum((F.col("x") > 0).cast("long")).alias("active")
+                ],
+            )
         finally:
             sc.setJobGroup("idle", "idle")
         n_jobs = len(spark.sparkContext.statusTracker()
@@ -449,6 +498,26 @@ def test_aggregators_one_job_per_check(spark):
         assert m3.extras["a0"] == m1.extras["a0"]
         # all vertices decrement in lock-step, so max == min
         assert m3.extras["a1"] == [m1.extras["a0"], m3.extras["a2"]]
+
+
+def test_run_gas_rejects_tuple_returning_step(spark):
+    """A step written for the old (state, frontier) contract fails
+    loudly, naming the contract, instead of being misread; so does a
+    ballot without an ``active`` column."""
+    from powergraph_spark.gas import run_gas
+
+    g = build(spark, REF_EDGES)
+    init = g.vertices.select("id", F.lit(1).alias("x"))
+
+    def old_step(graph, state, i):
+        return state, lambda df: df.filter("x > 0").select("id")
+
+    with pytest.raises(TypeError, match="must return the new state"):
+        run_gas(g, init, old_step, max_iterations=3,
+                observe_aggs=lambda: [F.count(F.lit(1)).alias("active")])
+    with pytest.raises(ValueError, match="'active'"):
+        run_gas(g, init, lambda graph, state, i: state, max_iterations=3,
+                observe_aggs=lambda: [F.count(F.lit(1)).alias("n")])
 
 
 def test_pagerank_superstep_plan_no_broadcast_of_state(spark):

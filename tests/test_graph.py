@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import pytest
 from conftest import REF_EDGES, REF_VERTICES
 from pyspark.sql import functions as F
 
@@ -179,6 +180,32 @@ def test_truncate_plan_bridge_live_and_origin_free(spark):
         "bridge is dead on this Spark version (the documented "
         "geometric optimizer blowup would silently return)"
     )
+
+
+def test_truncate_plan_bridge_failure_warns(spark, monkeypatch):
+    """When the origin-free bridge raises, truncate_plan still returns
+    the plainly checkpointed rows but says so with a RuntimeWarning
+    that names the error; the deliberate _ORIGIN_FREE_BRIDGE = False
+    seam stays silent."""
+    import warnings
+
+    from powergraph_spark import gas
+
+    def broken_bridge(jdf, session):
+        raise RuntimeError("bridge gone")
+
+    df = spark.range(0, 20).selectExpr("id", "id % 3 AS x")
+    monkeypatch.setattr(gas, "DataFrame", broken_bridge)
+    with pytest.warns(RuntimeWarning, match="RuntimeError: bridge gone"):
+        out = gas.truncate_plan(df)
+    assert sorted((r["id"], r["x"]) for r in out.collect()) == [
+        (i, i % 3) for i in range(20)
+    ]
+
+    monkeypatch.setattr(gas, "_ORIGIN_FREE_BRIDGE", False)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        gas.truncate_plan(df)
 
 
 def test_truncate_plan_fallback_correct_and_bounded(spark, monkeypatch):

@@ -55,6 +55,7 @@ def test_hits_hub_authority_structure(spark):
     out, it, converged = hits(g, max_iterations=50, tol=1e-10)
     got = {r["id"]: r for r in out.collect()}
     assert converged
+    assert it == 14
     assert got[0]["hub"] > got[5]["hub"] > 0
     assert got[0]["auth"] == 0.0          # nothing links to 0
     assert got[1]["auth"] > got[2]["auth"] > 0   # 1 has an extra in-link
