@@ -81,8 +81,8 @@ def _spread(df: DataFrame) -> DataFrame:
 
 def _co_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     # No .distinct() here: the only consumer is Graph.from_edges, whose
-    # finalize already dedups (src, dst) as a partition-local window on
-    # the pid layout — a distinct here would be a second full exchange
+    # finalize already dedups (src, dst) with a dropDuplicates after
+    # its src hash — a distinct here would be a second full exchange
     # + hash-agg of the pair set for nothing (r6 opt, guide §2.4).
     l1 = _load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     l2 = l1.withColumnRenamed("l_partkey", "p2")
@@ -2206,7 +2206,8 @@ def _q_coloring_ordered(spark: SparkSession, sf_dir: str, order: str) -> DataFra
     n_conflicts = count_conflicts(g, colors)
     n_colors = count_colors(colors)
     max_deg = int(
-        g.all_edges_view().groupBy("src").count().agg(F.max("count")).first()[0]
+        g.two_way_edges().groupBy("src").agg(F.sum("m").alias("d"))
+        .agg(F.max("d")).first()[0]
     )
     return spark.createDataFrame(
         [(n_conflicts, bool(n_colors <= max_deg + 1))],
@@ -2692,9 +2693,9 @@ def q_warp_nbr_degree_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     g = _co_graph(spark, sf_dir)
     deg = (
-        g.all_edges_view()
+        g.two_way_edges()
         .groupBy(F.col("src").alias("id"))
-        .agg(F.count(F.lit(1)).alias("deg"))
+        .agg(F.sum("m").alias("deg"))
     )
     vdata = g.vertices.select("id").join(deg, "id", "left").select(
         "id", F.coalesce("deg", F.lit(0)).alias("deg")

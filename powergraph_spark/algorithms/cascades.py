@@ -30,8 +30,9 @@ Two reference quirks, handled explicitly:
 
 Spark mapping — each superstep is one frontier-proportional plan:
 
-- gather: infected ids join the ALL_EDGES view on src, groupBy(dst)
-  count — work is O(edges incident to currently-infected), not O(E).
+- gather: infected ids join the graph's two-way view on src,
+  groupBy(dst) sum(m) — work is O(edges incident to
+  currently-infected), not O(E).
 - apply: one full-column pass over vertex state (LEFT join of the k
   counts; k is NULL→0 for untouched vertices, whose infection
   threshold 1-(1-p)^0 = 0 never fires). The single draw against
@@ -47,7 +48,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from ..checkpoint import CheckpointStore
 from ..gas import GASResult, run_gas
@@ -115,12 +115,7 @@ def cascades(
     seed table (cascades.cpp line_parser labels); default =
     :func:`seed_status`. Returns state (id, status, changed)."""
     P = graph.num_partitions
-    sym = (
-        graph.all_edges_view()
-        .repartition(P, "src")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    sym.count()
+    sym = graph.two_way_edges()
 
     if status is None:
         init = seed_status(graph, init_infected_prob, seed)
@@ -144,12 +139,12 @@ def cascades(
             F.col("id").alias("nbr")
         )
         # gather: k = |infected neighbors| over the ALL_EDGES multiset
-        # (reciprocal directed edges count twice, one roll per edge,
+        # (a reciprocal pair counts m = 2 times, one roll per edge,
         # matching the reference's per-edge gather list).
         k = (
             sym.join(inf.hint("shuffle_hash"), sym.src == inf.nbr)
             .groupBy(F.col("dst").alias("id"))
-            .agg(F.count(F.lit(1)).alias("k"))
+            .agg(F.sum("m").alias("k"))
         )
         u_rec = uniform_expr(seed, f"{it}:r")
         u_inf = uniform_expr(seed, f"{it}:i")
@@ -187,7 +182,7 @@ def cascades(
             )
         )
 
-    result = run_gas(
+    return run_gas(
         graph,
         init,
         step,
@@ -201,8 +196,6 @@ def cascades(
         resume=resume,
         verbose=verbose,
     )
-    sym.unpersist()
-    return result
 
 
 def sir_counts(state: DataFrame) -> DataFrame:

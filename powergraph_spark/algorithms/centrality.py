@@ -27,7 +27,8 @@ walking levels deepest-first. Every join carries the shuffle_hash
 hint over co-partitioned inputs (see pagerank.py).
 
 Scale shape: frontier rows = |sources| x |frontier vertices|; edges
-shuffled once (hash by src); per-level shuffles touch only the
+are read from the graph's src-hashed caches (directed betweenness
+shuffles one dst-hashed copy); per-level shuffles touch only the
 frontier. Depth is bounded by max_depth (web graphs: effective
 diameter ~ tens).
 """
@@ -53,14 +54,13 @@ def multi_source_bfs(
     spark = graph.edges.sparkSession
     P = graph.num_partitions
     # edge cols renamed (v -> w) so they never collide with the
-    # composite source key column `src` carried by the frontier.
+    # composite source key column `src` carried by the frontier. Both
+    # sources are src-hashed graph caches, so e is hashed by v.
     e = (
         graph.edges.select("src", "dst")
         if directed
         else graph.symmetrized_edges()
     ).select(F.col("src").alias("v"), F.col("dst").alias("w"))
-    e = e.repartition(P, "v").persist(StorageLevel.MEMORY_AND_DISK)
-    e.count()
 
     src_df = spark.createDataFrame(
         [(int(s),) for s in sources], "src long"
@@ -98,7 +98,6 @@ def multi_source_bfs(
             break
         visited = visited.unionByName(fresh).localCheckpoint(eager=True)
         level = fresh
-    e.unpersist()
     return visited
 
 
@@ -174,12 +173,19 @@ def betweenness(
     )
     maxd = bfs.agg(F.max("dist")).first()[0] or 0
 
-    e = (
-        graph.edges.select("src", "dst")
-        if directed
-        else graph.symmetrized_edges()
-    ).select(F.col("src").alias("v"), F.col("dst").alias("w"))
-    e = e.repartition(P, "w").persist(StorageLevel.MEMORY_AND_DISK)
+    # the dependency walk joins edges on their head w. The undirected
+    # view is symmetric, so reading each pair as (dst, src) gives the
+    # same edge set hashed by w; directed edges need a dst-hashed copy.
+    if directed:
+        e = (
+            graph.edges.select(F.col("src").alias("v"), F.col("dst").alias("w"))
+            .repartition(P, "w")
+            .persist(StorageLevel.MEMORY_AND_DISK)
+        )
+    else:
+        e = graph.symmetrized_edges().select(
+            F.col("dst").alias("v"), F.col("src").alias("w")
+        )
 
     # deepest level: no successors -> delta = 0
     delta = bfs.filter(F.col("dist") == maxd).select(
@@ -231,7 +237,8 @@ def betweenness(
         .select("id", F.coalesce("betweenness", F.lit(0.0)).alias("betweenness"))
     )
     bfs.unpersist()
-    e.unpersist()
+    if directed:
+        e.unpersist()
     return result
 
 

@@ -65,10 +65,7 @@ def coloring(
     if order not in ORDERS:
         raise ValueError(f"order must be one of {ORDERS}, got {order!r}")
     P = graph.num_partitions
-    sym = graph.symmetrized_edges().repartition(P, "src").persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    sym.count()
+    sym = graph.symmetrized_edges()
     # co-partition state with the gather joins (hash by id == the join
     # key); filters below preserve the partitioning, so the hinted
     # shuffle-hash joins run with zero exchange on the state side —
@@ -233,7 +230,6 @@ def coloring(
         if verbose:
             print(f"[coloring:{order}] round {it}")
 
-    sym.unpersist()
     return state.select("id", F.col("color").cast("int").alias("color"))
 
 

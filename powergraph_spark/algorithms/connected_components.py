@@ -19,7 +19,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from ..checkpoint import CheckpointStore
 from ..gas import GASResult, run_gas
@@ -52,18 +51,9 @@ def connected_components(
     the reference's dynamic scheduling, mirroring
     ``pagerank_warm_start``."""
     P = graph.num_partitions
-    # ALL_EDGES view: label floods both directions. The UNDEDUPED
-    # multiset view is deliberate (r6 opt): min-label messages are
-    # idempotent under duplicate edges, so the dedup exchange + hash
-    # agg symmetrized_edges() pays (a second all-to-all of the whole
-    # edge set) buys nothing here — the repartition below is the only
-    # shuffle this view needs (guide §2.4).
-    sym = (
-        graph.all_edges_view()
-        .repartition(P, "src")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    sym.count()
+    # ALL_EDGES view: label floods both directions. Min-label messages
+    # are idempotent, so the pair multiplicity m is ignored.
+    sym = graph.two_way_edges()
 
     if prev_state is not None:
         if new_edges is None:
@@ -121,7 +111,7 @@ def connected_components(
             )
         )
 
-    result = run_gas(
+    return run_gas(
         graph,
         init,
         step,
@@ -137,8 +127,6 @@ def connected_components(
         resume=resume,
         verbose=verbose,
     )
-    sym.unpersist()
-    return result
 
 
 def component_sizes(state: DataFrame) -> DataFrame:

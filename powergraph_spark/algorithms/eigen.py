@@ -16,7 +16,6 @@ import math
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from ..graph import Graph
 
@@ -31,14 +30,11 @@ def top_eigenvector(
     """Returns ((id, value) unit eigenvector, eigenvalue estimate) of
     the (symmetrized) adjacency matrix. Deterministic init x0 = 1/sqrt(n).
     """
-    if symmetric:
-        edges = graph.symmetrized_edges().repartition(
-            graph.num_partitions, "src"
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        edges.count()
-    else:
-        # the graph's own src-hashed cache: no copy to build or release
-        edges = graph.edges.select("src", "dst")
+    # both views are src-hashed graph caches: no copy to build or release
+    edges = (
+        graph.symmetrized_edges() if symmetric
+        else graph.edges.select("src", "dst")
+    )
 
     n = graph.num_vertices()
     x = graph.vertices.select(
@@ -79,8 +75,6 @@ def top_eigenvector(
             break
         lam = new_lam
 
-    if symmetric:
-        edges.unpersist()
     return x, lam
 
 

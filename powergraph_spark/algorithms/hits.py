@@ -10,10 +10,10 @@ personalized/weighted PageRank do.
 One iteration is one :func:`~powergraph_spark.gas.run_gas` superstep
 over the state (id, hub, auth, dauth). Each half-step is one mat-vec
 (scatter join + partial-agg sum) joined back onto the state and
-materialized once; its L2 norm is then read off the materialized rows
-and folded back in as a literal, so every projection stays
-whole-stage-codegen and the mat-vec never runs twice. Only (id, value)
-rows shuffle. ``dauth`` = |auth - previous auth| is the termination
+materialized once; its L2 norm rides that materialization job as an
+observed sum of squares and is folded back in as a literal, so every
+projection stays whole-stage-codegen and the mat-vec never runs twice.
+Only (id, value) rows shuffle. ``dauth`` = |auth - previous auth| is the termination
 ballot: a vertex is active while it is NULL (first iteration) or
 above ``tol``.
 
@@ -26,7 +26,7 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..gas import run_gas
@@ -51,7 +51,7 @@ def hits(
     def half_step(state: DataFrame, col: str, key_in: str, key_out: str,
                   out: str) -> tuple[DataFrame, float]:
         """state plus ``out`` = A (or Aᵀ) times state[col], materialized,
-        and the L2 norm of ``out`` read from the materialized rows."""
+        and the L2 norm of ``out`` observed by the same job."""
         contrib = (
             edges.join(
                 state.selectExpr("id AS _j", f"{col} AS _x").hint(
@@ -62,14 +62,15 @@ def hits(
             .groupBy(F.col(key_out).alias("id"))
             .agg(F.sum("_x").alias("_s"))
         )
+        obs = Observation()
         raw = (
             state.join(contrib.hint("shuffle_hash"), "id", "left")
             .selectExpr("*", f"coalesce(_s, 0.0) AS {out}")
             .drop("_s")
+            .observe(obs, F.sum(F.col(out) * F.col(out)).alias("ss"))
             .localCheckpoint(eager=True)
         )
-        ss = raw.agg(F.sum(F.col(out) * F.col(out))).first()[0]
-        return raw, math.sqrt(float(ss or 0.0))
+        return raw, math.sqrt(float(obs.get["ss"] or 0.0))
 
     def step(g: Graph, state: DataFrame, i: int) -> DataFrame:
         a, na = half_step(state.selectExpr("id", "hub", "auth AS _prev"),

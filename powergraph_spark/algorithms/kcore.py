@@ -23,29 +23,32 @@ from pyspark.storagelevel import StorageLevel
 from ..graph import Graph
 
 
-def _und_edges(graph: Graph, degree: str = "distinct") -> DataFrame:
-    """Undirected view used for peeling.
+def _peel_input(graph: Graph, degree: str) -> tuple[DataFrame, int]:
+    """(src, dst, m) peel input projected from the graph's two-way
+    view, and its edge count sum(m).
 
-    degree='distinct' (default): symmetrized + deduped — a vertex's
-    degree is its DISTINCT neighbor count. degree='multiset': the
-    ALL_EDGES view — a reciprocal directed pair (u,v),(v,u) counts
-    TWICE, exactly the reference's num_in_edges()+num_out_edges()
+    degree='distinct' (default): m = 1 — a vertex's degree is its
+    DISTINCT neighbor count. degree='multiset': m is the pair's
+    ALL_EDGES multiplicity — a reciprocal directed pair (u,v),(v,u)
+    counts TWICE, exactly the reference's num_in_edges()+num_out_edges()
     (kcore.cpp:154). The two semantics differ only on graphs with
     reciprocal directed edges; 'distinct' is the textbook k-core and
-    the default, 'multiset' is reference-exact."""
-    if degree == "multiset":
-        return graph.all_edges_view()
-    return graph.symmetrized_edges()  # both directions, deduped
+    the default, 'multiset' is reference-exact. A projection, never the
+    cached view itself: _peel unpersists its input."""
+    m = F.col("m") if degree == "multiset" else F.lit(1).cast("long")
+    edges = graph.two_way_edges().select("src", "dst", m.alias("m"))
+    return edges, int(edges.agg(F.sum("m")).first()[0] or 0)
 
 
 def _peel(edges: DataFrame, k: int, n_edges: int,
           max_iterations: int = 500) -> tuple[DataFrame, int]:
-    """Cascade-peel `edges` (persisted undirected view) to the k-core
-    fixpoint. One job per wave: survivors + their count materialize
-    together (observe). Returns (materialized core edges, count)."""
+    """Cascade-peel `edges` (undirected (src, dst, m) view) to the
+    k-core fixpoint; degrees and edge counts are sums of m. One job per
+    wave: survivors + their count materialize together (observe).
+    Returns (materialized core edges, count)."""
     for _ in range(max_iterations):
         deg = edges.groupBy(F.col("src").alias("id")).agg(
-            F.count(F.lit(1)).alias("d")
+            F.sum("m").alias("d")
         )
         ok = deg.filter(F.col("d") >= k).select("id")
         obs = Observation()
@@ -53,7 +56,7 @@ def _peel(edges: DataFrame, k: int, n_edges: int,
             edges.join(ok.hint("shuffle_hash"),
                        edges.src == ok.id, "leftsemi")
             .join(ok.hint("shuffle_hash"), edges.dst == ok.id, "leftsemi")
-            .observe(obs, F.count(F.lit(1)).alias("n"))
+            .observe(obs, F.sum("m").alias("n"))
             .localCheckpoint(eager=True)
         )
         n = int(obs.get["n"] or 0)
@@ -70,8 +73,7 @@ def _peel(edges: DataFrame, k: int, n_edges: int,
 def kcore_vertices(graph: Graph, k: int, max_iterations: int = 500,
                    degree: str = "distinct") -> DataFrame:
     """Vertex set (id) of the k-core."""
-    edges = _und_edges(graph, degree).persist(StorageLevel.MEMORY_AND_DISK)
-    n0 = edges.count()
+    edges, n0 = _peel_input(graph, degree)
     core, _ = _peel(edges, k, n0, max_iterations)
     return core.select(F.col("src").alias("id")).distinct()
 
@@ -82,8 +84,7 @@ def kcore_stats(graph: Graph, kmin: int, kmax: int,
     (kcore.cpp:159-176). Peels incrementally: the (k+1)-core is
     computed from the k-core, not from scratch."""
     spark = graph.edges.sparkSession
-    edges = _und_edges(graph, degree).persist(StorageLevel.MEMORY_AND_DISK)
-    n = edges.count()
+    edges, n = _peel_input(graph, degree)
     rows = []
     for k in range(kmin, kmax + 1):
         edges, n = _peel(edges, k, n)
@@ -99,8 +100,7 @@ def coreness(graph: Graph, kmax: int = 64,
              degree: str = "distinct") -> DataFrame:
     """(id, coreness): max K such that id is in the K-core. Peeling
     once, carrying the shrinking edge set across K."""
-    edges = _und_edges(graph, degree).persist(StorageLevel.MEMORY_AND_DISK)
-    n = edges.count()
+    edges, n = _peel_input(graph, degree)
     all_v = graph.vertices.select("id")
     core = all_v.select("id", F.lit(0).alias("coreness")).persist(
         StorageLevel.MEMORY_AND_DISK

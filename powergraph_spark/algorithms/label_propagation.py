@@ -9,8 +9,9 @@ label; scatter signals neighbors if the label changed. Exact-match
 gate at convergence per BASELINE.json.
 
 Spark mapping: the label counter monoid becomes groupBy(dst, label)
-.count() — partial aggregation merges counts en route exactly like the
-reference's += merging — and argmax-with-tie-break is
+.sum(m) over the graph's two-way view — partial aggregation merges
+counts en route exactly like the reference's += merging — and
+argmax-with-tie-break is
 min(struct(-count, label)), avoiding any map-typed column.
 """
 
@@ -18,7 +19,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from ..checkpoint import CheckpointStore
 from ..gas import GASResult, run_gas
@@ -40,14 +40,9 @@ def label_propagation(
     conventional seed). Returns state (id, label, changed).
     """
     P = graph.num_partitions
-    # ALL_EDGES multiset (no dedup): reciprocal edges count twice,
+    # ALL_EDGES multiset: a reciprocal pair's label counts m = 2 times,
     # matching the reference's in+out gather lists.
-    sym = (
-        graph.all_edges_view()
-        .repartition(P, "src")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    sym.count()
+    sym = graph.two_way_edges()
 
     if labels is None:
         init = graph.vertices.select(
@@ -73,7 +68,7 @@ def label_propagation(
         counts = (
             sym.join(cur.hint("shuffle_hash"), sym.src == cur.id)
             .groupBy(F.col("dst").alias("id"), F.col("label").alias("nbr_label"))
-            .agg(F.count(F.lit(1)).alias("cnt"))
+            .agg(F.sum("m").alias("cnt"))
         )
         # argmax count, tie -> smallest label (std::map iteration order,
         # label_propagation.cpp:101-114)
@@ -95,7 +90,7 @@ def label_propagation(
             )
         )
 
-    result = run_gas(
+    return run_gas(
         graph,
         init,
         step,
@@ -109,8 +104,6 @@ def label_propagation(
         resume=resume,
         verbose=verbose,
     )
-    sym.unpersist()
-    return result
 
 
 def label_histogram(state: DataFrame) -> DataFrame:

@@ -10,6 +10,9 @@ Spark-first mapping (SURVEY.md §1.4):
   This is the graph's one edge layout: the superstep loops whose edge
   view is a forward projection (pagerank, hits, approx_diameter, scc,
   directed eigen) read this cache directly.
+- ``two_way_edges()`` — ``(src, dst, m)``, the ALL_EDGES gather view
+  that every loop over both edge directions reads, built from
+  ``edges`` once, on first request, and cached with the graph.
 - ``vertices(id BIGINT, [vertex-data cols...])`` — one row per vertex;
   master/mirror replication is *not* materialized: the scatter join
   replicates vertex state to edge partitions each superstep, which is
@@ -63,6 +66,7 @@ class Graph:
     vertices: DataFrame
     num_partitions: int
     _stats: dict = field(default_factory=dict)
+    _two_way: DataFrame | None = field(default=None, repr=False)
 
     # ------------------------------------------------------------- build
     @staticmethod
@@ -244,29 +248,46 @@ class Graph:
             return outs.unionAll(ins).distinct()
         raise ValueError(direction)
 
+    def two_way_edges(self) -> DataFrame:
+        """(src, dst, m): each pair of the ALL_EDGES gather multiset
+        (in-edge list + out-edge list, ivertex_program.hpp:477-495)
+        once, ``m`` = its multiplicity (2 for a reciprocal pair).
+        Hashed by src into ``num_partitions``, so a gather join on src
+        against id-hashed state adds no edge exchange. Built on first
+        request with one exchange (the count reuses the repartition's
+        distribution) and cached until ``unpersist()``; callers must
+        not unpersist it."""
+        if self._two_way is None:
+            fwd = self.edges.select("src", "dst")
+            rev = self.edges.select(
+                F.col("dst").alias("src"), F.col("src").alias("dst")
+            )
+            view = (
+                fwd.unionAll(rev)
+                .repartition(self.num_partitions, "src")
+                .groupBy("src", "dst")
+                .agg(F.count(F.lit(1)).alias("m"))
+                .persist(StorageLevel.MEMORY_AND_DISK)
+            )
+            view.count()
+            self._two_way = view
+        return self._two_way
+
     def symmetrized_edges(self) -> DataFrame:
         """Both directions of every edge, deduped — the undirected view
-        used by CC/triangles (graph_basic_types.hpp:54)."""
-        fwd = self.edges.select("src", "dst")
-        rev = self.edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        return fwd.unionAll(rev).dropDuplicates(["src", "dst"])
-
-    def all_edges_view(self) -> DataFrame:
-        """Both directions WITHOUT dedup — the exact ALL_EDGES gather
-        multiset (in-edge list + out-edge list). A reciprocal pair
-        (u,v),(v,u) contributes v twice to u's gather, matching the
-        reference (ivertex_program.hpp:477-495); required for LP's
-        label counter to match exactly."""
-        fwd = self.edges.select("src", "dst")
-        rev = self.edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        return fwd.unionAll(rev)
+        (graph_basic_types.hpp:54). A projection of
+        :meth:`two_way_edges`: no exchange of its own."""
+        return self.two_way_edges().select("src", "dst")
 
     def unpersist(self) -> None:
         try:
             self.edges.unpersist()
             self.vertices.unpersist()
+            if self._two_way is not None:
+                self._two_way.unpersist()
         except Exception:
             pass
+        self._two_way = None
 
 
 # vertex_set algebra (vertex_set.hpp:267-430): id-DataFrames + set ops.

@@ -41,3 +41,18 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
+
+
+def plan_nodes(plan):
+    """Every physical node of ``plan`` (a JVM SparkPlan) outside cached
+    relations, descending into AQE's current plan."""
+    found, stack = [], [plan]
+    while stack:
+        node = stack.pop()
+        if node.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+            stack.append(node.executedPlan())
+            continue
+        found.append(node)
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return found

@@ -3,7 +3,7 @@ from __future__ import annotations
 import math
 
 import pytest
-from conftest import REF_EDGES, REF_VERTICES
+from conftest import REF_EDGES, REF_VERTICES, plan_nodes
 from oracles import (
     cc_oracle,
     lp_oracle,
@@ -41,6 +41,24 @@ PL_VERTICES = set(range(300))
 
 def build(spark, edges, P=4):
     return Graph.from_pandas(spark, edges, num_partitions=P)
+
+
+def cache_scans(plan):
+    """The cached relations ``plan`` scans."""
+    return [n.relation() for n in plan_nodes(plan)
+            if n.getClass().getSimpleName() == "InMemoryTableScanExec"]
+
+
+def cached_relation(spark, df):
+    """The InMemoryRelation Spark's cache manager holds for ``df``."""
+    return (
+        spark._jsparkSession.sharedState().cacheManager()
+        .lookupCachedData(df._jdf).get().cachedRepresentation()
+    )
+
+
+def scans_of(rels, cached):
+    return [r for r in rels if r.cacheBuilder().equals(cached.cacheBuilder())]
 
 
 # ---------------------------------------------------------------- PageRank
@@ -294,11 +312,16 @@ def test_cc_superstep_plan_no_broadcast_of_state(spark):
     plan a BroadcastExchange of vertex state — the state/frontier side
     of every join must be a ShuffledHashJoin over the co-partitioned
     layout (the reference's mirrors->master exchange,
-    synchronous_engine.hpp:1860-1877, is never a driver broadcast)."""
+    synchronous_engine.hpp:1860-1877, is never a driver broadcast).
+    The edge side of every superstep scans the graph's cached two-way
+    view."""
     plans: list[str] = []
+    scans: list[list] = []
 
     def hook(df, step):
-        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        plan = df._jdf.queryExecution().executedPlan()
+        plans.append(plan.toString())
+        scans.append(cache_scans(plan))
 
     g = build(spark, PL_EDGES)
     connected_components(g, max_iterations=3, plan_hook=hook)
@@ -306,6 +329,44 @@ def test_cc_superstep_plan_no_broadcast_of_state(spark):
     for p in plans:
         assert "BroadcastExchange" not in p, p
         assert "ShuffledHashJoin" in p, p
+    view = cached_relation(spark, g.two_way_edges())
+    for p, rels in zip(plans, scans):
+        assert scans_of(rels, view), p
+
+
+def test_lp_after_cc_reuses_two_way_view(spark, monkeypatch):
+    """LP run after CC on the same graph builds no second two-way view:
+    every LP superstep scans the view CC built, and none repartitions
+    edges by src."""
+    import importlib
+
+    # the package re-exports the function under the module's name
+    lp_mod = importlib.import_module(
+        "powergraph_spark.algorithms.label_propagation"
+    )
+    plans: list = []
+    run_gas = lp_mod.run_gas
+
+    def hooked_run_gas(*args, **kw):
+        def hook(df, step):
+            plans.append(df._jdf.queryExecution().executedPlan())
+        return run_gas(*args, plan_hook=hook, **kw)
+
+    monkeypatch.setattr(lp_mod, "run_gas", hooked_run_gas)
+    g = build(spark, PL_EDGES)
+    connected_components(g, max_iterations=3)
+    view = cached_relation(spark, g.two_way_edges())
+    label_propagation(g, max_iterations=3)
+    assert plans, "plan_hook never fired"
+    for plan in plans:
+        assert scans_of(cache_scans(plan), view), plan.toString()
+        edge_repartitions = [
+            n for n in plan_nodes(plan)
+            if n.getClass().getSimpleName() == "ShuffleExchangeExec"
+            and n.shuffleOrigin().toString() == "REPARTITION_BY_NUM"
+            and "src" in n.outputPartitioning().toString()
+        ]
+        assert not edge_repartitions, plan.toString()
 
 
 def test_edge_state_view_plan_no_broadcast_of_state(spark):
@@ -532,38 +593,20 @@ def test_pagerank_superstep_plan_no_broadcast_of_state(spark):
     plans: list[str] = []
     scans: list[list] = []
 
-    def cache_scans(plan):
-        found, stack = [], [plan]
-        while stack:
-            node = stack.pop()
-            kind = node.getClass().getSimpleName()
-            if kind == "AdaptiveSparkPlanExec":
-                stack.append(node.executedPlan())
-                continue
-            if kind == "InMemoryTableScanExec":
-                found.append(node.relation())
-            kids = node.children()
-            stack.extend(kids.apply(i) for i in range(kids.size()))
-        return found
-
     def hook(df, step):
         plan = df._jdf.queryExecution().executedPlan()
         plans.append(plan.toString())
         scans.append(cache_scans(plan))
 
     g = build(spark, PL_EDGES)
-    edges_cache = (
-        spark._jsparkSession.sharedState().cacheManager()
-        .lookupCachedData(g.edges._jdf).get().cachedRepresentation()
-    )
+    edges_cache = cached_relation(spark, g.edges)
     pagerank(g, tol=0.0, max_iterations=3, plan_hook=hook)
     assert plans, "plan_hook never fired"
     for p in plans:
         assert "BroadcastExchange" not in p, p
         assert "ShuffledHashJoin" in p, p
     for p, rels in zip(plans, scans):
-        own = [r for r in rels
-               if r.cacheBuilder().equals(edges_cache.cacheBuilder())]
+        own = scans_of(rels, edges_cache)
         assert own, p
         assert "pid" in own[0].output().toString(), p
     assert g.edges.storageLevel != StorageLevel.NONE

@@ -1,7 +1,7 @@
 from __future__ import annotations
 
 import pytest
-from conftest import REF_EDGES, REF_VERTICES
+from conftest import REF_EDGES, REF_VERTICES, plan_nodes
 from pyspark.sql import functions as F
 
 from powergraph_spark.graph import Graph, vset_and, vset_complement, vset_minus, vset_or
@@ -111,6 +111,37 @@ def test_from_edges_single_exchange_dedup(spark):
     ).collect()
     assert len(placed) == 3
     assert all(r["pid"] == r["part"] for r in placed), placed
+
+
+def test_two_way_edges_view_built_once(spark):
+    """The graph's two-way view: every pair of the ALL_EDGES multiset
+    once with its multiplicity m, built on first request, read without
+    an exchange afterwards, released by unpersist() and not inherited
+    by transformed graphs."""
+    from collections import Counter
+
+    from pyspark.storagelevel import StorageLevel
+
+    pairs = [(1, 2), (2, 1), (2, 3), (2, 3), (3, 4)]  # reciprocal + dup
+    g = Graph.from_pandas(spark, pairs, num_partitions=4, dedup=False)
+    view = g.two_way_edges()
+    both = Counter(pairs) + Counter((d, s) for s, d in pairs)
+    assert {(r["src"], r["dst"]): r["m"] for r in view.collect()} == both
+    sym = g.symmetrized_edges()
+    assert sym.columns == ["src", "dst"]
+    assert sorted(tuple(r) for r in sym.collect()) == sorted(both)
+
+    assert g.two_way_edges() is view
+    plan = g.symmetrized_edges()._jdf.queryExecution().executedPlan()
+    kinds = [n.getClass().getSimpleName() for n in plan_nodes(plan)]
+    assert "InMemoryTableScanExec" in kinds, plan.toString()
+    assert not [k for k in kinds if "Exchange" in k], plan.toString()
+
+    kids = [g.transform_vertices(x=F.lit(1)), g.transform_edges(w=F.lit(1))]
+    assert all(k._two_way is None for k in kids)
+    g.unpersist()
+    assert g._two_way is None
+    assert view.storageLevel == StorageLevel.NONE
 
 
 def test_powerlaw_alpha_mle(spark):
