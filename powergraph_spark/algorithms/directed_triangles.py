@@ -1,6 +1,6 @@
 """Directed triangle census.
 
-Reference: /root/reference/toolkits/graph_analytics/directed_triangle_count.cpp
+Reference: PowerGraph toolkits/graph_analytics/directed_triangle_count.cpp
 :288-345 (the four classes), :560-606 (per-edge intersections),
 :612-640 (per-vertex gather), :666-668 (totals).
 
@@ -16,237 +16,91 @@ and folds them into per-vertex counts (:625-636):
     in_triangles(x)      = Σ_{s->x}  st_st(s,x)
 Totals are the plain vertex sums (:666-668, no normalization).
 
-Spark mapping: a DEGREE-HYBRID plan. Every wedge u-x-v (x the shared
-"center" endpoint) is counted exactly once, routed by the center's
-degree:
-
-- center degree <= hub_degree_cap: edge-table self-join on the center
-  ("wedge path"). A center of degree d emits d^2 tiny rows straight
-  into partial hash aggregation — cheap and pipelined, but quadratic
-  in d, so hubs are excluded: a 10^7-in-degree web hub would emit
-  ~10^14 rows where the reference's iterate-the-smaller-sorted-set
-  intersection (:279-310) costs O(Σ_e min(deg)).
-- center degree > hub_degree_cap ("hub"): the reference's sorted-set
-  intersection shape. For each vertex w, its HUB neighbors are packed
-  into sorted arrays per direction (outH/inH), hash-bucketed by hub id
-  into hub_buckets slices so no single row carries an unbounded array
-  (the round-2 memory hazard). Per existing edge (u,v), each class is
-  Σ_bkt |left(u,bkt) ∩ right(v,bkt)| via JVM array_intersect — cost
-  O(Σ_e #hub-neighbors), i.e. O(Σ_e deg) worst case and O(m) total
-  array volume, never d^2.
-
-The hub id set is small by construction (≤ 2m/cap vertices can exceed
-degree cap: ~2M ids ≈ 16 MB at m=10^10, cap=10^4), hence broadcast.
-The class-exact equivalence of the two paths is differential-tested
-with a planted hub and a tiny cap; wedge-row boundedness is asserted
-via DataFrame.observe, not wall time.
+Spark mapping: triangle_count's kernel on the undirected pair set.
+Every term above is a triangle {x, t, w} of the pairs joined by at
+least one arc, and the kernel lists each such triangle once through
+the degree-oriented sorted-list intersection (every oriented list has
+at most sqrt(2m) entries, so no hub's neighbourhood is paired with
+itself). With A(u, v) the number of u -> v arc rows, each triangle
+credits its vertices through its 6 ordered role triples (x, t, w):
+    in(x)      += A(t,x)·A(w,t)·A(w,x)
+    out(x)     += A(x,t)·A(x,w)·A(t,w)
+    through(x) += A(x,t)·A(w,x)·A(w,t)
+    cycle(x)   += A(x,t)·A(w,x)·A(t,w)
+On a deduplicated graph A is 0/1; on a ``dedup=False`` graph every
+duplicate row counts, the multiset reading of the same sums.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from itertools import permutations
+
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from ..graph import Graph
+from .triangle_count import _TRIANGLE_EDGES, _edge_counts, _triangles
+
+_CLASSES = ("in_triangles", "out_triangles", "through_triangles",
+            "cycle_triangles")
 
 
-def directed_triangle_counts(
-    graph: Graph,
-    hub_degree_cap: int = 10_000,
-    hub_buckets: int = 32,
-    wedge_metrics: dict | None = None,
-) -> DataFrame:
+def directed_triangle_counts(graph: Graph) -> DataFrame:
     """(id, in_triangles, out_triangles, through_triangles,
-    cycle_triangles) for every vertex.
-
-    hub_degree_cap: centers with in- or out-degree above this use the
-    sorted-array intersection path instead of the d^2 wedge self-join.
-    hub_buckets: hub ids are hash-sliced into this many buckets so a
-    single hub-adjacency array row stays ~max_hub_neighbors/buckets
-    (size it as expected_max_degree/10^4 at full scale).
-    wedge_metrics: when a dict is passed, an Observation counting the
-    generated wedge rows per class is attached (filled once the result
-    is consumed) — the plan-boundedness hook used by tests.
-    """
-    e = graph.edges.select("src", "dst").persist(StorageLevel.MEMORY_AND_DISK)
-
-    deg = (
-        e.select(F.col("src").alias("id"), F.lit(1).alias("o"), F.lit(0).alias("i"))
-        .unionAll(
-            e.select(F.col("dst").alias("id"), F.lit(0).alias("o"), F.lit(1).alias("i"))
+    cycle_triangles) for every vertex."""
+    fwd = (F.col("src") < F.col("dst")).cast("long")
+    arcs = (  # (a < b, n_ab = #a->b rows, n_ba = #b->a rows)
+        graph.edges.filter(F.col("src") != F.col("dst"))
+        .groupBy(
+            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
         )
+        .agg(F.sum(fwd).alias("n_ab"), F.sum(1 - fwd).alias("n_ba"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
+    ec, oriented = _edge_counts(arcs.select("a", "b"), graph.num_partitions)
+    tri = _triangles(ec)
+    for x, y in _TRIANGLE_EDGES:
+        tri = tri.join(
+            arcs.select(
+                F.col("a").alias(x), F.col("b").alias(y),
+                F.col("n_ab").alias(f"A_{x}{y}"), F.col("n_ba").alias(f"A_{y}{x}"),
+            ),
+            [x, y],
+        )
+
+    def A(u, v):
+        return F.col(f"A_{u}{v}")
+
+    roles = [
+        F.struct(
+            F.col(x).alias("id"),
+            (A(t, x) * A(w, t) * A(w, x)).alias("in_triangles"),
+            (A(x, t) * A(x, w) * A(t, w)).alias("out_triangles"),
+            (A(x, t) * A(w, x) * A(w, t)).alias("through_triangles"),
+            (A(x, t) * A(w, x) * A(t, w)).alias("cycle_triangles"),
+        )
+        for x, t, w in permutations("pqr")
+    ]
+    per_v = (
+        tri.select(F.explode(F.array(*roles)).alias("s"))
+        .select("s.*")
         .groupBy("id")
-        .agg(F.sum("o").alias("out_deg"), F.sum("i").alias("in_deg"))
-    )
-    hubs = deg.filter(
-        (F.col("in_deg") > hub_degree_cap) | (F.col("out_deg") > hub_degree_cap)
-    ).select(F.col("id").alias("hid"))
-
-    # hub flags on both endpoints: one broadcast of the (small) hub set
-    eh = (
-        e.join(F.broadcast(hubs), e.src == F.col("hid"), "left")
-        .withColumn("src_hub", F.col("hid").isNotNull())
-        .drop("hid")
-        .join(F.broadcast(hubs), F.col("dst") == F.col("hid"), "left")
-        .withColumn("dst_hub", F.col("hid").isNotNull())
-        .drop("hid")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-
-    # ---- wedge path: non-hub centers only --------------------------------
-    def wedge(a, b, join_cond, u_col, w2_col, self_pair_cond, name):
-        """COUNT of wedges per ordered endpoint pair (u, w2); the
-        center-side filters on a/b already exclude hub centers."""
-        w = a.join(b, join_cond).filter(self_pair_cond)
-        if wedge_metrics is not None:
-            obs = Observation()
-            w = w.observe(obs, F.count(F.lit(1)).alias("wedge_rows"))
-            wedge_metrics[name] = obs
-        return w.groupBy(u_col.alias("u"), w2_col.alias("w2")).agg(
-            F.count(F.lit(1)).alias("n")
-        )
-
-    lo_dst = eh.filter(~F.col("dst_hub"))   # center = shared dst
-    lo_src = eh.filter(~F.col("src_hub"))   # center = shared src
-
-    # s_s(u,v)   = |out(u) ∩ out(v)|: wedges u->x<-v (shared dst x)
-    s_s_low = wedge(
-        lo_dst.alias("a"), lo_dst.alias("b"),
-        F.col("a.dst") == F.col("b.dst"),
-        F.col("a.src"), F.col("b.src"),
-        F.col("a.src") != F.col("b.src"), "s_s",
-    )
-    # st_st(u,v) = |in(u) ∩ in(v)|: wedges u<-x->v (shared src x)
-    st_st_low = wedge(
-        lo_src.alias("a"), lo_src.alias("b"),
-        F.col("a.src") == F.col("b.src"),
-        F.col("a.dst"), F.col("b.dst"),
-        F.col("a.dst") != F.col("b.dst"), "st_st",
-    )
-    # st_s(u,v)  = |in(u) ∩ out(v)|: wedges u<-x<-v (path v->x->u);
-    # the center x is a.src AND b.dst — either filter excludes hub x
-    st_s_low = wedge(
-        lo_src.alias("a"), lo_dst.alias("b"),
-        F.col("a.src") == F.col("b.dst"),
-        F.col("a.dst"), F.col("b.src"),
-        F.col("a.dst") != F.col("b.src"), "st_s",
-    )
-
-    # ---- hub path: bucketed sorted-array intersections -------------------
-    def bkt(c):
-        return F.pmod(F.xxhash64(c), F.lit(hub_buckets)).cast("int")
-
-    # outH(w) = hub out-neighbors of w; inH(w) = hub in-neighbors of w.
-    # Total array volume is O(m) (each edge lands in at most one array
-    # element per table); bucketing bounds any single row.
-    outH = (
-        eh.filter("dst_hub")
-        .groupBy(F.col("src").alias("id"), bkt(F.col("dst")).alias("bkt"))
-        .agg(F.sort_array(F.collect_list("dst")).alias("arr"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    inH = (
-        eh.filter("src_hub")
-        .groupBy(F.col("dst").alias("id"), bkt(F.col("src")).alias("bkt"))
-        .agg(F.sort_array(F.collect_list("src")).alias("arr"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-
-    def hub_pairs(left_tab, right_tab):
-        """Per existing edge (u,v): Σ_bkt |left(u,bkt) ∩ right(v,bkt)| —
-        the reference's per-edge set intersection (:560-606) restricted
-        to hub members, JVM-side."""
-        lt = left_tab.select(
-            F.col("id").alias("lu"), "bkt", F.col("arr").alias("la")
-        )
-        rt = right_tab.select(
-            F.col("id").alias("rv"), F.col("bkt").alias("rbkt"),
-            F.col("arr").alias("ra"),
-        )
-        return (
-            e.join(lt, e.src == F.col("lu"))
-            .join(rt, (e.dst == F.col("rv")) & (F.col("bkt") == F.col("rbkt")))
-            .groupBy(F.col("src").alias("u"), F.col("dst").alias("w2"))
-            .agg(
-                F.sum(F.size(F.array_intersect("la", "ra"))).alias("n")
-            )
-        )
-
-    s_s_hub = hub_pairs(outH, outH)    # out(u) ∩ out(v), hub members
-    st_st_hub = hub_pairs(inH, inH)    # in(u) ∩ in(v)
-    st_s_hub = hub_pairs(inH, outH)    # in(u) ∩ out(v)
-
-    def merged(low, hub, name):
-        return (
-            low.unionAll(hub)
-            .groupBy("u", "w2")
-            .agg(F.sum("n").alias(name))
-        )
-
-    s_s = merged(s_s_low, s_s_hub, "s_s")
-    st_st = merged(st_st_low, st_st_hub, "st_st")
-    st_s = merged(st_s_low, st_s_hub, "st_s")
-
-    def lookup(base, counts):
-        return base.join(
-            counts,
-            (base.src == counts.u) & (base.dst == counts.w2),
-            "left",
-        ).drop("u", "w2")
-
-    per_edge = lookup(lookup(lookup(e, s_s), st_st), st_s).select(
-        "src", "dst",
-        F.coalesce("s_s", F.lit(0)).alias("s_s"),
-        F.coalesce("st_st", F.lit(0)).alias("st_st"),
-        F.coalesce("st_s", F.lit(0)).alias("st_s"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-
-    from_out = per_edge.groupBy(F.col("src").alias("id")).agg(
-        F.sum("s_s").alias("out_triangles"),
-        F.sum("st_st").alias("through_triangles"),
-        F.sum("st_s").alias("cycle_triangles"),
-    )
-    from_in = per_edge.groupBy(F.col("dst").alias("id")).agg(
-        F.sum("st_st").alias("in_triangles")
+        .agg(*[F.sum(c).alias(c) for c in _CLASSES])
     )
     out = (
         graph.vertices.select("id")
-        .join(from_out, "id", "left")
-        .join(from_in, "id", "left")
-        .select(
-            "id",
-            F.coalesce("in_triangles", F.lit(0)).cast("long")
-            .alias("in_triangles"),
-            F.coalesce("out_triangles", F.lit(0)).cast("long")
-            .alias("out_triangles"),
-            F.coalesce("through_triangles", F.lit(0)).cast("long")
-            .alias("through_triangles"),
-            F.coalesce("cycle_triangles", F.lit(0)).cast("long")
-            .alias("cycle_triangles"),
-        )
+        .join(per_v, "id", "left")
+        .select("id", *[F.coalesce(c, F.lit(0)).cast("long").alias(c)
+                        for c in _CLASSES])
+        .localCheckpoint(eager=True)
     )
-    # Materialize once, then release every cached intermediate — a
-    # long-lived session calling this repeatedly must not accumulate
-    # blocks (e/eh/outH/inH/per_edge are only needed to build `out`).
-    out = out.localCheckpoint(eager=True)
-    for cached in (per_edge, outH, inH, eh, e):
-        cached.unpersist()
+    oriented.unpersist()
+    arcs.unpersist()
     return out
 
 
-def directed_triangle_totals(
-    graph: Graph,
-    hub_degree_cap: int = 10_000,
-    hub_buckets: int = 32,
-) -> DataFrame:
+def directed_triangle_totals(graph: Graph) -> DataFrame:
     """One-row totals, the reference's default output (:759-763)."""
-    per_v = directed_triangle_counts(
-        graph, hub_degree_cap=hub_degree_cap, hub_buckets=hub_buckets
-    )
-    return per_v.agg(
-        F.sum("in_triangles").cast("long").alias("in_triangles"),
-        F.sum("out_triangles").cast("long").alias("out_triangles"),
-        F.sum("through_triangles").cast("long").alias("through_triangles"),
-        F.sum("cycle_triangles").cast("long").alias("cycle_triangles"),
-    )
+    per_v = directed_triangle_counts(graph)
+    return per_v.agg(*[F.sum(c).cast("long").alias(c) for c in _CLASSES])

@@ -10,9 +10,10 @@ standard crawl-graph "which links are missing" primitive (Liben-Nowell
 Plan shape: one wedge self-join of the symmetrized edge list on the
 center vertex (dst < dst2 so each unordered pair appears once per
 center), partial-aggregated groupBy on the pair key, then a left-anti
-join against the existing-edge set. Wedge volume is sum_v d(v)^2/2 —
-the same hub-quadratic cost the directed census bounds, so the same
-knob is exposed: `hub_degree_cap` drops wedge CENTERS above the cap
+join against the existing-edge set. Wedge volume is Σ_v C(d(v), 2),
+quadratic in the hub degrees; it is summed from the degree table
+before the join, and a call above `_MAX_WEDGES` is refused. The knob
+that bounds it: `hub_degree_cap` drops wedge CENTERS above the cap
 (scores become lower bounds that ignore super-hub intermediaries,
 which for link prediction is usually the desired behavior anyway —
 a hub in common carries almost no signal, exactly why Adamic-Adar
@@ -29,6 +30,10 @@ from pyspark.sql import functions as F
 
 from ..graph import Graph
 from .triangle_count import _und_degrees, _und_edges
+
+# Wedge rows the self-join may pair, Σ_c C(d_c, 2) over the kept centers;
+# above it link_scores refuses instead of running a hub-quadratic join.
+_MAX_WEDGES = 10**9
 
 
 def link_scores(
@@ -52,6 +57,15 @@ def link_scores(
     centers = deg.withColumnRenamed("id", "a").withColumnRenamed("deg", "d_c")
     if hub_degree_cap is not None:
         centers = centers.filter(F.col("d_c") <= hub_degree_cap)
+    n_wedges = (
+        centers.agg(F.sum(F.col("d_c") * (F.col("d_c") - 1))).first()[0] or 0
+    ) // 2
+    if n_wedges > _MAX_WEDGES:
+        raise ValueError(
+            f"link_scores would pair {n_wedges} wedges (budget "
+            f"{_MAX_WEDGES}); pass a smaller hub_degree_cap to drop the "
+            "highest-degree centers"
+        )
     # wedge (center, x < y): join the center's degree once, pair the
     # two adjacency sides with a strict order so each pair counts once
     left = sym.join(centers, "a").select(

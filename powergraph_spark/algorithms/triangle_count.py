@@ -20,7 +20,9 @@ Algorithm (one pass, no iteration):
    every w in the intersection credits 1.
 
 The intersection runs JVM-side (array_intersect inside whole-stage
-codegen) — no Python in the hot path.
+codegen) — no Python in the hot path. Steps 2-5 are the one triangle
+kernel, ``_edge_counts``: ktruss and the directed census enumerate
+their triangles through it too.
 """
 
 from __future__ import annotations
@@ -75,14 +77,13 @@ def _und_degrees(und: DataFrame) -> DataFrame:
     )
 
 
-def _oriented(graph: Graph, canonical_edges: bool = False) -> DataFrame:
-    """Undirected edges oriented lo->hi by (total degree, id).
-    ``canonical_edges``: see :func:`_und_edges`."""
+def _oriented(und: DataFrame) -> DataFrame:
+    """The unique (a < b) edges of ``und`` oriented lo->hi by (total
+    degree, id)."""
     # NOT persisted on purpose: Catalyst's ReusedExchange already
     # serves the three consumers from one dedup shuffle, and an
     # explicit cache was MEASURED SLOWER (11.2 vs 8.2 s at sf0.1 —
     # materializing the cache blocks exchange reuse/pipelining)
-    und = _und_edges(graph, canonical_edges)
     deg = _und_degrees(und)
     da, db = deg.alias("da"), deg.alias("db")
     e = (
@@ -103,23 +104,33 @@ def _oriented(graph: Graph, canonical_edges: bool = False) -> DataFrame:
 
 
 def _edge_counts(
-    graph: Graph, persist: bool = True, canonical_edges: bool = False
+    und: DataFrame, P: int, persist: bool = True
 ) -> tuple[DataFrame, DataFrame]:
-    """((lo, hi, common), oriented handle). With ``persist=True`` the
-    caller owns the handle and must unpersist it once its own actions
-    are done — an earlier version leaked one cached copy of the
-    oriented edge set per invocation (r6 fix). ``persist=False``
-    materializes the shared oriented table as a LAZY localCheckpoint
-    instead: still computed once across the three consumers, but
-    cleaned up by the ContextCleaner when the returned DataFrame is
-    garbage-collected — the right mode when the handle cannot be
-    returned to the caller (public triangle_edge_counts)."""
-    P = graph.num_partitions
-    oriented = _oriented(graph, canonical_edges).repartition(P, "lo")
-    oriented = (
-        oriented.persist(StorageLevel.MEMORY_AND_DISK) if persist
-        else oriented.localCheckpoint(eager=False)
-    )
+    """((lo, hi, common), oriented handle) for a unique (a < b) edge
+    table ``und`` — the one triangle kernel that triangle counting,
+    k-truss and the directed census share. The oriented table is
+    hashed by ``lo`` into ``P`` partitions.
+
+    ``persist=True`` caches it and materializes it at once, so the
+    adjacency build and the ``lo`` side of the intersection join read
+    that layout without an exchange. The caller owns the handle and
+    must unpersist it once its own actions are done — an earlier
+    version leaked one cached copy of the oriented edge set per
+    invocation (r6 fix). ``persist=False`` makes it a LAZY
+    localCheckpoint instead (which does not keep the hash layout):
+    still computed once across the three consumers, but cleaned up by
+    the ContextCleaner when the returned DataFrame is garbage-collected
+    — the right mode when the handle cannot be returned to the caller
+    (public triangle_edge_counts)."""
+    oriented = _oriented(und).repartition(P, "lo")
+    if persist:
+        # materialized before adj is planned: an unmaterialized cache
+        # reports UnknownPartitioning under AQE, and groupBy(lo) would
+        # re-shuffle the oriented table
+        oriented = oriented.persist(StorageLevel.MEMORY_AND_DISK)
+        oriented.count()
+    else:
+        oriented = oriented.localCheckpoint(eager=False)
     adj = oriented.groupBy(F.col("lo").alias("id")).agg(
         F.sort_array(F.collect_list("hi")).alias("nbrs")
     )
@@ -139,14 +150,35 @@ def _edge_counts(
     return ec, oriented
 
 
+# the three edges of a _triangles row, each as (smaller, larger) id
+_TRIANGLE_EDGES = (("p", "q"), ("p", "r"), ("q", "r"))
+
+
+def _triangles(ec: DataFrame) -> DataFrame:
+    """(p, q, r), p < q < r: every triangle of the kernel's output once,
+    one row per element of an edge's ``common`` array."""
+    t = ec.select("lo", "hi", F.explode("common").alias("w"))
+    lo, hi, w = F.col("lo"), F.col("hi"), F.col("w")
+    p, r = F.least(lo, hi, w), F.greatest(lo, hi, w)
+    return t.select(
+        p.alias("p"),
+        F.when((lo != p) & (lo != r), lo)
+        .when((hi != p) & (hi != r), hi)
+        .otherwise(w)
+        .alias("q"),
+        r.alias("r"),
+    )
+
+
 def triangle_edge_counts(graph: Graph, canonical_edges: bool = False) -> DataFrame:
     """(lo, hi, common) — triangles closed over each oriented edge,
     plus the intersection itself for per-vertex attribution. The
     shared oriented table rides a lazy localCheckpoint (computed once,
     GC-cleaned) rather than an explicit persist this entry point could
     never release (r6 leak fix for the public API). ``canonical_edges``:
-    see :func:`_oriented`."""
-    return _edge_counts(graph, persist=False, canonical_edges=canonical_edges)[0]
+    see :func:`_und_edges`."""
+    und = _und_edges(graph, canonical_edges)
+    return _edge_counts(und, graph.num_partitions, persist=False)[0]
 
 
 def triangle_total(graph: Graph, canonical_edges: bool = False) -> int:
@@ -161,7 +193,8 @@ def triangle_total(graph: Graph, canonical_edges: bool = False) -> int:
     no ec persist, no second pass (r6 opt; ``triangle_count`` keeps the
     cached counts because per-vertex attribution reads them thrice).
     """
-    ec, oriented = _edge_counts(graph, canonical_edges=canonical_edges)
+    und = _und_edges(graph, canonical_edges)
+    ec, oriented = _edge_counts(und, graph.num_partitions)
     total = int(
         ec.select(F.size("common").alias("c")).agg(F.sum("c")).first()[0] or 0
     )
@@ -183,7 +216,8 @@ def triangle_count(
     never silently recompute the whole intersection pipeline (r6 fix —
     previously ec was unpersisted while per_vertex was still lazy).
     """
-    ec0, oriented = _edge_counts(graph, canonical_edges=canonical_edges)
+    und = _und_edges(graph, canonical_edges)
+    ec0, oriented = _edge_counts(und, graph.num_partitions)
     ec = ec0.withColumn("c", F.size("common")).persist(
         StorageLevel.MEMORY_AND_DISK
     )

@@ -259,6 +259,48 @@ def test_canonical_fast_path_identical_ktruss_links_modularity(spark):
     )
 
 
+def test_triangle_kernel_plan_reads_lo_layout(spark, monkeypatch):
+    """The kernel's oriented table is hashed by lo once: with shuffle
+    joins forced, triangle_total's executed plan scans it as
+    hashpartitioning(lo, P), the adj groupBy(lo) and the lo-side join
+    add no exchange, and the only exchanges are the hi-side join's
+    probe shuffle and the final sum's single-partition gather."""
+    from powergraph_spark.algorithms.triangle_count import triangle_total
+
+    canon = sorted({(min(a, b), max(a, b)) for a, b in PL_EDGES if a != b})
+    g = build(spark, canon)
+    df_cls = type(g.edges)
+    first = df_cls.first
+    seen = []
+
+    def recording_first(self):
+        seen.append([
+            (n.getClass().getSimpleName(), n.outputPartitioning().toString())
+            for n in plan_nodes(self._jdf.queryExecution().executedPlan())
+        ])
+        return first(self)
+
+    monkeypatch.setattr(df_cls, "first", recording_first)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        total = triangle_total(g, canonical_edges=True)
+    finally:
+        spark.conf.set(key, old)
+    assert total == triangles_oracle(canon, PL_VERTICES)[1]
+    (nodes,) = seen
+    scans = [p for k, p in nodes if k == "InMemoryTableScanExec"]
+    assert len(scans) == 3, nodes
+    assert all(p.startswith("hashpartitioning(lo#") and p.endswith(", 4)")
+               for p in scans), nodes
+    exchanges = [p for k, p in nodes if k == "ShuffleExchangeExec"]
+    assert len(exchanges) == 2, nodes
+    assert "SinglePartition" in exchanges, nodes
+    assert [p for p in exchanges if p.startswith("hashpartitioning(hi#")], nodes
+    assert not [k for k, _ in nodes if k == "BroadcastExchangeExec"], nodes
+
+
 def test_canonical_edges_rejects_reciprocal_pairs(spark):
     """canonical_edges=True on edges that are not src < dst raises
     instead of counting the reciprocal pair (1, 2), (2, 1) twice."""

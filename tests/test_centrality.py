@@ -7,6 +7,7 @@ from collections import defaultdict, deque
 
 import pytest
 from oracles import powerlaw_edges
+from pyspark.sql import functions as F
 
 from powergraph_spark.algorithms import (
     betweenness,
@@ -165,11 +166,14 @@ def test_directed_census_matches_python(spark, edges):
     assert tot["cycle_triangles"] == sum(x[3] for x in exp.values())
 
 
-def test_directed_census_hub_path(spark):
-    """The degree-hybrid plan: with a tiny hub cap, hub-centered wedges
-    must be counted by the bucketed array-intersection path and EXCLUDED
-    from the wedge self-joins (asserted via DataFrame.observe row
-    counts, not wall time), while per-vertex results stay exact."""
+def test_directed_census_hub_path(spark, monkeypatch):
+    """A planted hub: per-vertex results stay exact, and the shared
+    triangle kernel the census runs never pairs the hub's neighbourhood
+    with itself — every degree-oriented adjacency list holds at most
+    floor(sqrt(2m)) entries (m = undirected pairs), their total is m."""
+    import importlib
+    import math
+
     # planted in-hub: 200 spokes -> hub 0, spokes chained so every
     # direction class has hub-centered triangles; plus a low-degree tail
     n = 200
@@ -178,27 +182,54 @@ def test_directed_census_hub_path(spark):
     edges += [(0, 1), (0, 5), (300, 301), (301, 302), (300, 302)]
     g = build(spark, edges)
 
-    exp = _directed_census_py(edges)
-    metrics = {}
-    got_df = directed_triangle_counts(
-        g, hub_degree_cap=50, hub_buckets=4, wedge_metrics=metrics
+    dt = importlib.import_module(
+        "powergraph_spark.algorithms.directed_triangles"
     )
+    lists = {}
+    kernel = dt._edge_counts
+
+    def recording_kernel(und, P, *args, **kw):
+        ec, oriented = kernel(und, P, *args, **kw)
+        lists["m"] = und.count()
+        lists["sizes"] = [r["n"] for r in oriented.groupBy("lo").agg(
+            F.count(F.lit(1)).alias("n")).collect()]
+        return ec, oriented
+
+    monkeypatch.setattr(dt, "_edge_counts", recording_kernel)
+    exp = _directed_census_py(edges)
     got = {r["id"]: (r["in_triangles"], r["out_triangles"],
                      r["through_triangles"], r["cycle_triangles"])
-           for r in got_df.collect()}
+           for r in directed_triangle_counts(g).collect()}
     for v, (i, o, t, c) in exp.items():
         assert got[v] == (i, o, t, c), (v, got[v], (i, o, t, c))
 
-    # hub 0 has in-degree n+? >> cap: its n^2 s_s wedges (shared dst 0)
-    # must NOT flow through the self-join. Non-hub centers have degree
-    # <= 4 here, so each class's wedge stream stays tiny.
-    assert metrics["s_s"].get["wedge_rows"] < n * n / 4
-    assert metrics["st_st"].get["wedge_rows"] < 5 * len(edges)
-    assert metrics["st_s"].get["wedge_rows"] < 5 * len(edges)
+    m = len({(min(u, v), max(u, v)) for u, v in edges})
+    assert lists["m"] == m
+    assert sum(lists["sizes"]) == m
+    assert max(lists["sizes"]) <= math.isqrt(2 * m), lists["sizes"]
 
-    # differential: hybrid == pure-wedge plan (cap larger than any degree)
-    pure = {r["id"]: (r["in_triangles"], r["out_triangles"],
-                      r["through_triangles"], r["cycle_triangles"])
-            for r in directed_triangle_counts(
-                g, hub_degree_cap=10**9).collect()}
-    assert got == pure
+
+def test_directed_census_random_packed(spark):
+    """30 random small digraphs with reciprocal pairs, packed into one
+    graph on disjoint id ranges: one census call equals the oracle."""
+    import random
+
+    rng = random.Random(5)
+    edges = []
+    for gi in range(30):
+        base, nv = 100 * gi, rng.randint(4, 12)
+        for u in range(nv):
+            for v in range(u + 1, nv):
+                x = rng.random()
+                if x < 0.2:
+                    edges.append((base + u, base + v))
+                elif x < 0.4:
+                    edges.append((base + v, base + u))
+                elif x < 0.55:
+                    edges += [(base + u, base + v), (base + v, base + u)]
+    g = build(spark, edges)
+    got = {r["id"]: (r["in_triangles"], r["out_triangles"],
+                     r["through_triangles"], r["cycle_triangles"])
+           for r in directed_triangle_counts(g).collect()}
+    exp = {v: tuple(c) for v, c in _directed_census_py(edges).items()}
+    assert got == exp

@@ -14,9 +14,13 @@ PL_EDGES = powerlaw_edges(80, seed=17)
 
 
 def _replica(edges, k):
+    """(support per truss edge, peel rounds); the rounds include the
+    final one that removes nothing, as ktruss counts them."""
     es = {tuple(sorted(e)) for e in edges if e[0] != e[1]}
     need = k - 2
+    rounds = 0
     while True:
+        rounds += 1
         nbrs = {}
         for a, b in es:
             nbrs.setdefault(a, set()).add(b)
@@ -26,7 +30,7 @@ def _replica(edges, k):
         }
         bad = {e for e, s in sup.items() if s < need}
         if not bad:
-            return sup
+            return sup, rounds
         es -= bad
 
 
@@ -35,8 +39,9 @@ def test_ktruss_matches_replica(spark):
     for k in (3, 4):
         out, rounds = ktruss(g, k)
         got = {(r["a"], r["b"]): r["support"] for r in out.collect()}
-        assert got == _replica(PL_EDGES, k), f"k={k}"
-        assert rounds >= 1
+        exp, exp_rounds = _replica(PL_EDGES, k)
+        assert got == exp, f"k={k}"
+        assert rounds == exp_rounds, f"k={k}"
     g.unpersist()
 
 

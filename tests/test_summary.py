@@ -17,6 +17,8 @@ from __future__ import annotations
 
 import math
 
+import pytest
+
 from powergraph_spark.algorithms.summary import (
     degree_assortativity,
     local_clustering_coefficients,
@@ -111,6 +113,24 @@ def test_link_prediction_hand_values(spark):
 
     top = top_link_predictions(g, k=2, min_common=1).collect()
     assert [(r["a"], r["b"]) for r in top] == [(2, 3), (1, 5)]
+
+
+def test_link_prediction_wedge_budget(spark, monkeypatch):
+    """Σ_c C(d_c, 2) over the kite's kept centers is 11 (degrees 3, 2,
+    2, 4, 1); above the budget link_scores refuses and names the cap,
+    and a cap that drops the hub brings it back under (5 wedges)."""
+    from powergraph_spark.algorithms import link_prediction
+
+    monkeypatch.setattr(link_prediction, "_MAX_WEDGES", 10)
+    g = _graph(spark)
+    with pytest.raises(ValueError, match="11 wedges.*hub_degree_cap"):
+        link_prediction.link_scores(g, min_common=1)
+    capped = {
+        (r["a"], r["b"]): r["cn"]
+        for r in link_prediction.link_scores(
+            g, min_common=1, hub_degree_cap=3).collect()
+    }
+    assert capped == {(2, 3): 1}
 
 
 def test_harmonic_hand_values(spark):
