@@ -12,17 +12,17 @@ that point approximates the diameter.
 Spark mapping: masks are an array<long> column; the per-hop OR-gather
 is explode(register index) -> groupBy(dst, reg).agg(bit_or) ->
 re-assemble array. All JVM-side; one shuffle pair per hop, identical
-shape to the PageRank superstep.
+shape to the PageRank superstep. Each hop is one run_gas superstep
+whose rows carry the vertex's estimate and the previous hop's, so the
+ballot compares the two sums inside the hop's own job.
 """
 
 from __future__ import annotations
 
-import math
-
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
+from ..gas import run_gas
 from ..graph import Graph
 
 
@@ -82,17 +82,6 @@ def _fm_est_expr(r: int) -> str:
     return f"pow(2.0, {mean_b}) / 0.77351"
 
 
-def _fm_count(masks_df: DataFrame, r: int) -> float:
-    """Sum over vertices of the per-vertex FM estimate (standalone job;
-    the hop loop gets the same number for free via observe)."""
-    total = (
-        masks_df.selectExpr(f"{_fm_est_expr(r)} AS est")
-        .agg(F.sum("est"))
-        .first()[0]
-    )
-    return float(total or 0.0)
-
-
 def approx_diameter(
     graph: Graph,
     r: int = 10,
@@ -105,12 +94,12 @@ def approx_diameter(
     equality of consecutive estimates on converged masks; we stop when
     relative growth <= tol)."""
     edges = graph.edges.select("src", "dst")
-    state = _init_masks(graph.vertices, r).persist(StorageLevel.MEMORY_AND_DISK)
-    history = [_fm_count(state, r)]
-    hops = 0
-    for hop in range(1, max_hops + 1):
+    est = f"{_fm_est_expr(r)} AS est"
+
+    def step(g: Graph, state: DataFrame, i: int) -> DataFrame:
+        masks = state.select("id", "masks")
         nbr = (
-            edges.join(state, edges.dst == state.id)
+            edges.join(masks, edges.dst == masks.id)
             .select(F.col("src").alias("vid"), F.posexplode("masks").alias("reg", "m"))
             .groupBy("vid", "reg")
             .agg(F.bit_or("m").alias("m"))
@@ -118,7 +107,7 @@ def approx_diameter(
             .agg(F.array_sort(F.collect_list(F.struct("reg", "m"))).alias("rm"))
             .select("vid", F.transform("rm", lambda s: s["m"]).alias("nbr_masks"))
         )
-        new_state = (
+        return (
             state.join(nbr, state.id == nbr.vid, "left")
             .select(
                 "id",
@@ -126,26 +115,30 @@ def approx_diameter(
                     F.col("nbr_masks").isNotNull(),
                     F.zip_with("masks", "nbr_masks", lambda a, b: a.bitwiseOR(b)),
                 ).otherwise(F.col("masks")).alias("masks"),
+                F.col("est").alias("prev_est"),
             )
+            .selectExpr("id", "masks", est, "prev_est")
         )
-        # the hop estimate rides the hop's own materialization job as
-        # an observe accumulator — zero extra |V| x R scans per hop
-        # (the same fusion discipline as run_gas's convergence ballot)
-        obs = Observation()
-        new_state = new_state.observe(
-            obs, F.expr(f"sum({_fm_est_expr(r)})").alias("est")
-        )
-        new_state = new_state.localCheckpoint(eager=True)
-        state.unpersist()
-        state = new_state
-        est = float(obs.get["est"] or 0.0)
-        if verbose:
-            print(f"[diameter] hop={hop} est={est:.1f}")
-        history.append(est)
-        hops = hop
-        prev = history[-2]
-        if prev > 0 and (est - prev) / prev <= tol:
-            hops = hop - 1
-            break
-    state.unpersist()
+
+    init = _init_masks(graph.vertices, r).selectExpr(
+        "id", "masks", est, "CAST(NULL AS DOUBLE) AS prev_est"
+    )
+    # a hop's estimate and the one before it are summed by the same
+    # job over the same rows, so at the mask fixpoint the growth is
+    # exactly 0
+    result = run_gas(
+        graph, init, step,
+        observe_aggs=lambda: [
+            F.expr(
+                "CASE WHEN sum(prev_est) > 0 AND try_divide(sum(est) - "
+                f"sum(prev_est), sum(prev_est)) <= {float(tol)!r}D "
+                "THEN 0 ELSE 1 END"
+            ).alias("active"),
+            F.expr("coalesce(sum(est), 0.0D)").alias("metric"),
+        ],
+        max_iterations=max_hops, verbose=verbose,
+    )
+    est0 = init.agg(F.sum("est")).first()[0] or 0.0
+    history = [float(est0)] + [m.metric for m in result.metrics]
+    hops = result.supersteps - 1 if result.converged else result.supersteps
     return hops, history

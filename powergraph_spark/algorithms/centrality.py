@@ -21,9 +21,9 @@ quantities per sampled source:
 Spark mapping (the SURVEY §2.6 multi-source composite-key design):
 state is keyed (src, id) so ALL sources advance in ONE frontier —
 K sources cost the same number of supersteps as one. Forward pass =
-level-synchronous BFS accumulating path counts sigma via a partially-
-aggregated groupBy; backward pass = Brandes dependency accumulation
-walking levels deepest-first. Every join carries the shuffle_hash
+level-synchronous BFS on run_gas, one superstep per level, accumulating
+path counts sigma via a partially-aggregated groupBy; backward pass =
+Brandes dependency accumulation walking levels deepest-first. Every join carries the shuffle_hash
 hint over co-partitioned inputs (see pagerank.py).
 
 Scale shape: frontier rows = |sources| x |frontier vertices|; edges
@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from ..gas import run_gas
 from ..graph import Graph
 
 
@@ -62,43 +63,36 @@ def multi_source_bfs(
         else graph.symmetrized_edges()
     ).select(F.col("src").alias("v"), F.col("dst").alias("w"))
 
-    src_df = spark.createDataFrame(
-        [(int(s),) for s in sources], "src long"
-    )
-    level = (
-        src_df.select(
-            "src",
-            F.col("src").alias("id"),
-            F.lit(0).alias("dist"),
-            F.lit(1.0).alias("sigma"),
-        )
-        .repartition(P, "id")
-        .localCheckpoint(eager=True)
-    )
-    visited = level
-
-    for d in range(1, max_depth + 1):
+    def step(g: Graph, state: DataFrame, i: int) -> DataFrame:
+        # the frontier is the rows found last level; the (src, id)
+        # pairs it reaches that are not yet visited are the next one
+        level = state.filter("fresh")
         nxt = (
             e.join(level.hint("shuffle_hash"), e.v == level.id)
             .groupBy("src", "w")
             .agg(F.sum("sigma").alias("sigma"))
             .select("src", F.col("w").alias("id"), "sigma")
         )
-        fresh = (
+        new = (
             nxt.join(
-                visited.select("src", "id").hint("shuffle_hash"),
+                state.select("src", "id").hint("shuffle_hash"),
                 ["src", "id"],
                 "left_anti",
             )
-            .select("src", "id", F.lit(d).alias("dist"), "sigma")
+            .selectExpr("src", "id", f"{i + 1} AS dist", "sigma", "true AS fresh")
             .repartition(P, "id")
-            .localCheckpoint(eager=True)
         )
-        if fresh.isEmpty():
-            break
-        visited = visited.unionByName(fresh).localCheckpoint(eager=True)
-        level = fresh
-    return visited
+        return state.withColumn("fresh", F.lit(False)).unionByName(new)
+
+    init = spark.createDataFrame(
+        [(int(s),) for s in sources], "src long"
+    ).selectExpr("src", "src AS id", "0 AS dist", "1.0D AS sigma", "true AS fresh")
+    result = run_gas(
+        graph, init.repartition(P, "id"), step,
+        observe_aggs=lambda: [F.expr("count_if(fresh)").alias("active")],
+        max_iterations=max_depth,
+    )
+    return result.state.drop("fresh")
 
 
 def closeness(

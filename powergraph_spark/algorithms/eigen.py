@@ -14,9 +14,10 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+from ..gas import run_gas
 from ..graph import Graph
 
 
@@ -36,46 +37,46 @@ def top_eigenvector(
         else graph.edges.select("src", "dst")
     )
 
-    n = graph.num_vertices()
-    x = graph.vertices.select(
-        "id", F.lit(1.0 / math.sqrt(n)).alias("v")
-    ).localCheckpoint(eager=True)
-
-    lam = 0.0
-    for it in range(max_iterations):
-        # y = A x  (mat-vec == gather join + sum agg)
+    def step(g: Graph, state: DataFrame, i: int) -> DataFrame:
+        # y = A v (mat-vec == gather join + sum agg) joined onto the
+        # state and materialized once; |y|^2 and y.v (the Rayleigh
+        # quotient, v unit) ride that job as observed sums
         y = (
-            edges.join(x.selectExpr("id", "v AS xv"), edges.src == F.col("id"))
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.sum("xv").alias("y"))
+            edges.join(state.selectExpr("id AS _j", "v AS _x").hint(
+                "shuffle_hash"), edges.src == F.col("_j"))
+            .groupBy(F.col("dst").alias("id")).agg(F.sum("_x").alias("_s"))
         )
+        obs = Observation()
         y = (
-            graph.vertices.select("id")
-            .join(y, "id", "left")
-            .selectExpr("id", "coalesce(y, 0.0) AS y")
+            state.join(y.hint("shuffle_hash"), "id", "left")
+            .selectExpr("id", "v", "lam", "coalesce(_s, 0.0) AS y")
+            .observe(obs, F.expr("sum(y * y)").alias("yy"),
+                     F.expr("sum(y * v)").alias("xy"))
             .localCheckpoint(eager=True)
         )
-        row = (
-            y.join(x, "id")
-            .agg(
-                F.sum(F.col("y") * F.col("y")).alias("yy"),
-                F.sum(F.col("y") * F.col("v")).alias("xy"),
-            )
-            .first()
-        )
-        norm = math.sqrt(float(row["yy"] or 0.0))
-        new_lam = float(row["xy"] or 0.0)  # Rayleigh quotient (x unit)
-        if norm == 0.0:
-            return x, 0.0
-        x = y.selectExpr("id", f"y / {norm} AS v").localCheckpoint(eager=True)
-        if verbose:
-            print(f"[eigen] it={it} lambda={new_lam:.8f}")
-        if abs(new_lam - lam) <= tol * max(1.0, abs(new_lam)):
-            lam = new_lam
-            break
-        lam = new_lam
+        norm, xy = math.sqrt(obs.get["yy"]), obs.get["xy"]
+        if norm == 0.0:  # A v = 0: keep v, report lambda 0 and stop
+            return y.selectExpr("id", "v", "0.0D AS lam", "0.0D AS dlam")
+        return y.selectExpr("id", f"y / {norm} AS v", f"{xy!r}D AS lam",
+                            f"abs({xy!r}D - lam) AS dlam")
 
-    return x, lam
+    # lam and dlam are the same on every row: the run stops once the
+    # Rayleigh quotient moves by at most tol * max(1, |lambda|)
+    init = graph.vertices.selectExpr(
+        "id", f"{1.0 / math.sqrt(graph.num_vertices())!r}D AS v",
+        "0.0D AS lam", "CAST(NULL AS DOUBLE) AS dlam",
+    )
+    result = run_gas(
+        graph, init, step,
+        observe_aggs=lambda: [
+            F.expr(f"count_if(dlam IS NULL OR dlam > {float(tol)!r}D "
+                   "* greatest(1.0D, abs(lam)))").alias("active"),
+            F.max("lam").alias("metric"),
+        ],
+        max_iterations=max_iterations, verbose=verbose,
+    )
+    lam = result.metrics[-1].metric if result.metrics else 0.0
+    return result.state.select("id", "v"), lam
 
 
 def normalize_eigenvector(

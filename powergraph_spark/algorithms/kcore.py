@@ -6,26 +6,27 @@ degree < K; deletions cascade (deleted vertices message their edge
 counts to neighbors, :96-142). The reference reports per-K surviving
 vertex/edge counts over [kmin, kmax].
 
-Spark mapping: the cascade is an iterative filter + degree recount on
-a shrinking edge set — ONE job per peel wave: the survivor filter is
-computed and materialized in the same job that counts it (via
-DataFrame.observe accumulators), so no per-wave isEmpty()/count()
-scans. `coreness` runs the peeling once, recording for every vertex
-the largest K whose core contains it.
+Spark mapping: one peel wave is one run_gas superstep over the edge
+state (src, dst, m, keep). It drops the edges the previous wave
+flagged, recounts degrees and flags the edges of every vertex under
+degree K; the ballot counts the flagged edges. `coreness` runs the
+peeling once, recording for every vertex the largest K whose core
+contains it.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from ..gas import run_gas
 from ..graph import Graph
 
 
-def _peel_input(graph: Graph, degree: str) -> tuple[DataFrame, int]:
+def _peel_input(graph: Graph, degree: str) -> DataFrame:
     """(src, dst, m) peel input projected from the graph's two-way
-    view, and its edge count sum(m).
+    view.
 
     degree='distinct' (default): m = 1 — a vertex's degree is its
     DISTINCT neighbor count. degree='multiset': m is the pair's
@@ -33,48 +34,48 @@ def _peel_input(graph: Graph, degree: str) -> tuple[DataFrame, int]:
     counts TWICE, exactly the reference's num_in_edges()+num_out_edges()
     (kcore.cpp:154). The two semantics differ only on graphs with
     reciprocal directed edges; 'distinct' is the textbook k-core and
-    the default, 'multiset' is reference-exact. A projection, never the
-    cached view itself: _peel unpersists its input."""
+    the default, 'multiset' is reference-exact."""
     m = F.col("m") if degree == "multiset" else F.lit(1).cast("long")
-    edges = graph.two_way_edges().select("src", "dst", m.alias("m"))
-    return edges, int(edges.agg(F.sum("m")).first()[0] or 0)
+    return graph.two_way_edges().select("src", "dst", m.alias("m"))
 
 
-def _peel(edges: DataFrame, k: int, n_edges: int,
-          max_iterations: int = 500) -> tuple[DataFrame, int]:
+def _peel(graph: Graph, edges: DataFrame, k: int,
+          max_iterations: int = 500) -> tuple[DataFrame, int | None]:
     """Cascade-peel `edges` (undirected (src, dst, m) view) to the
-    k-core fixpoint; degrees and edge counts are sums of m. One job per
-    wave: survivors + their count materialize together (observe).
-    Returns (materialized core edges, count)."""
-    for _ in range(max_iterations):
-        deg = edges.groupBy(F.col("src").alias("id")).agg(
-            F.sum("m").alias("d")
+    k-core fixpoint on run_gas; degrees and edge counts are sums of m.
+    Returns (core edges, their edge count sum(m); None if no wave ran)."""
+
+    def step(g: Graph, state: DataFrame, i: int) -> DataFrame:
+        # drop the edges the previous wave flagged, recount degrees,
+        # and flag the edges of every vertex now under degree k
+        e = state.filter("keep").select("src", "dst", "m")
+        low = e.groupBy("src").agg(F.sum("m").alias("d")).filter(f"d < {k}")
+        lo_s = low.selectExpr("src AS _ls").hint("shuffle_hash")
+        lo_d = low.selectExpr("src AS _ld").hint("shuffle_hash")
+        return (
+            e.join(lo_s, e.src == lo_s._ls, "left")
+            .join(lo_d, e.dst == lo_d._ld, "left")
+            .selectExpr("src", "dst", "m", "_ls IS NULL AND _ld IS NULL AS keep")
         )
-        ok = deg.filter(F.col("d") >= k).select("id")
-        obs = Observation()
-        nxt = (
-            edges.join(ok.hint("shuffle_hash"),
-                       edges.src == ok.id, "leftsemi")
-            .join(ok.hint("shuffle_hash"), edges.dst == ok.id, "leftsemi")
-            .observe(obs, F.sum("m").alias("n"))
-            .localCheckpoint(eager=True)
-        )
-        n = int(obs.get["n"] or 0)
-        edges.unpersist()
-        edges = nxt.persist(StorageLevel.MEMORY_AND_DISK)
-        # a doomed vertex always owns >= 1 edge, so an unchanged edge
-        # count is exactly the no-doomed fixpoint
-        if n == n_edges:
-            return edges, n
-        n_edges = n
-    return edges, n_edges
+
+    # a doomed vertex always owns >= 1 edge, so a wave that flags no
+    # edge is exactly the no-doomed fixpoint
+    result = run_gas(
+        graph, edges.withColumn("keep", F.lit(True)), step,
+        observe_aggs=lambda: [
+            F.expr("count_if(NOT keep)").alias("active"),
+            F.expr("coalesce(sum(IF(keep, m, 0)), 0)").alias("metric"),
+        ],
+        max_iterations=max_iterations,
+    )
+    n = int(result.metrics[-1].metric) if result.metrics else None
+    return result.state.filter("keep").select("src", "dst", "m"), n
 
 
 def kcore_vertices(graph: Graph, k: int, max_iterations: int = 500,
                    degree: str = "distinct") -> DataFrame:
     """Vertex set (id) of the k-core."""
-    edges, n0 = _peel_input(graph, degree)
-    core, _ = _peel(edges, k, n0, max_iterations)
+    core, _ = _peel(graph, _peel_input(graph, degree), k, max_iterations)
     return core.select(F.col("src").alias("id")).distinct()
 
 
@@ -84,15 +85,14 @@ def kcore_stats(graph: Graph, kmin: int, kmax: int,
     (kcore.cpp:159-176). Peels incrementally: the (k+1)-core is
     computed from the k-core, not from scratch."""
     spark = graph.edges.sparkSession
-    edges, n = _peel_input(graph, degree)
+    edges = _peel_input(graph, degree)
     rows = []
     for k in range(kmin, kmax + 1):
-        edges, n = _peel(edges, k, n)
+        edges, n = _peel(graph, edges, k)
         nv = edges.select("src").distinct().count()
         rows.append((k, nv, n // 2))
         if nv == 0:
             break
-    edges.unpersist()
     return spark.createDataFrame(rows, "k int, n_vertices long, n_edges long")
 
 
@@ -100,13 +100,13 @@ def coreness(graph: Graph, kmax: int = 64,
              degree: str = "distinct") -> DataFrame:
     """(id, coreness): max K such that id is in the K-core. Peeling
     once, carrying the shrinking edge set across K."""
-    edges, n = _peel_input(graph, degree)
+    edges = _peel_input(graph, degree)
     all_v = graph.vertices.select("id")
     core = all_v.select("id", F.lit(0).alias("coreness")).persist(
         StorageLevel.MEMORY_AND_DISK
     )
     for k in range(1, kmax + 1):
-        edges, n = _peel(edges, k, n)
+        edges, n = _peel(graph, edges, k)
         if n == 0:
             break
         survivors = edges.select(F.col("src").alias("id")).distinct()
@@ -121,5 +121,4 @@ def coreness(graph: Graph, kmax: int = 64,
         )
         core.unpersist()
         core = new_core.persist(StorageLevel.MEMORY_AND_DISK)
-    edges.unpersist()
     return core

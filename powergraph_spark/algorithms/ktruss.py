@@ -11,25 +11,25 @@ Set-up, once: triangle_count's kernel (degree-ordered orientation,
 sorted-list intersection per oriented edge) lists every triangle of
 the edge set as (p < q < r).
 
-Per peel round (all JVM, no Python):
-- support = the occurrences of each edge in the triangle table (one
-  partial-agg shuffle), 0-filled over the current edges;
-- edges with support < k-2 drop, and so does every triangle that has a
-  dropped edge; repeat until a round removes nothing.
+Per peel round, one run_gas superstep over the edge state
+(a, b, support, keep) (all JVM, no Python):
+- every triangle with an edge the previous round flagged drops (three
+  left-anti joins; the triangle table is materialized in the step);
+- support = the occurrences of each kept edge in the triangle table
+  (one partial-agg shuffle), 0-filled; keep = support >= k-2. The
+  ballot counts the unkept edges; a round that flags none ends the run.
 
 A triangle of the surviving edges is a triangle of the set-up edges
 whose three edges all survive, so the triangle table stays exactly the
-current edge set's triangles and the intersection never re-runs. Each
-round's edge and triangle tables materialize once via localCheckpoint,
-so plans stay flat across rounds.
+current edge set's triangles and the intersection never re-runs.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
+from ..gas import run_gas
 from ..graph import Graph
 from .triangle_count import (
     _TRIANGLE_EDGES, _edge_counts, _triangles, _und_edges,
@@ -62,34 +62,36 @@ def ktruss(
     checked (see triangle_count._und_edges)."""
     if k < 2:
         raise ValueError("k-truss requires k >= 2")
-    need = k - 2
     cur = _und_edges(graph, canonical_edges).localCheckpoint(eager=True)
     ec, oriented = _edge_counts(cur, graph.num_partitions)
     tri = _triangles(ec).localCheckpoint(eager=True)
     oriented.unpersist()
-    rounds = 0
-    sup = _support(cur, tri).persist(StorageLevel.MEMORY_AND_DISK)
-    while rounds < max_rounds:
-        rounds += 1
-        n_bad = sup.filter(F.col("support") < need).count()
-        if verbose:
-            print(f"[ktruss] round={rounds} removing={n_bad}")
-        if n_bad == 0:
-            break
-        cur = (
-            sup.filter(F.col("support") >= need)
-            .select("a", "b")
-            .localCheckpoint(eager=True)
-        )
-        bad = sup.filter(F.col("support") < need)
-        for x, y in _TRIANGLE_EDGES:
-            tri = tri.join(
-                bad.select(F.col("a").alias(x), F.col("b").alias(y)),
-                [x, y], "left_anti",
-            )
-        tri = tri.localCheckpoint(eager=True)
-        sup.unpersist()
-        sup = _support(cur, tri).persist(StorageLevel.MEMORY_AND_DISK)
-    out = sup.localCheckpoint(eager=True)
-    sup.unpersist()
-    return out, rounds
+
+    def step(g: Graph, state: DataFrame, i: int) -> DataFrame:
+        # drop the edges the previous step flagged and every triangle
+        # that has one (the triangle table lives across steps), then
+        # recount the kept edges' supports
+        nonlocal tri
+        if i > 0:
+            bad = state.filter("NOT keep")
+            for x, y in _TRIANGLE_EDGES:
+                tri = tri.join(
+                    bad.select(F.col("a").alias(x), F.col("b").alias(y)),
+                    [x, y], "left_anti",
+                )
+            tri = tri.localCheckpoint(eager=True)
+        kept = state.filter("keep").select("a", "b")
+        return _support(kept, tri).withColumn("keep", F.col("support") >= k - 2)
+
+    # superstep s checks what peel round s would: rounds == supersteps
+    result = run_gas(
+        graph, cur.withColumn("keep", F.lit(True)), step,
+        observe_aggs=lambda: [F.expr("count_if(NOT keep)").alias("active")],
+        max_iterations=max_rounds, verbose=verbose,
+    )
+    out = result.state
+    if not result.converged:
+        # a capped run returns the kept edges' recounted supports,
+        # unchecked, as a peel round leaves them
+        out = step(graph, out, result.supersteps)
+    return out.select("a", "b", "support"), result.supersteps

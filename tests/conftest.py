@@ -56,3 +56,15 @@ def plan_nodes(plan):
         kids = node.children()
         stack.extend(kids.apply(i) for i in range(kids.size()))
     return found
+
+
+def count_jobs(spark, fn, tag):
+    """(fn(), the number of Spark jobs fn submitted): fn runs under the
+    job group ``tag``, which must be unique to this call."""
+    sc = spark.sparkContext
+    sc.setJobGroup(tag, tag)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup("idle", "idle")
+    return out, len(sc.statusTracker().getJobIdsForGroup(tag))

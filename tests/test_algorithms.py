@@ -3,7 +3,7 @@ from __future__ import annotations
 import math
 
 import pytest
-from conftest import REF_EDGES, REF_VERTICES, plan_nodes
+from conftest import REF_EDGES, REF_VERTICES, count_jobs, plan_nodes
 from oracles import (
     cc_oracle,
     lp_oracle,
@@ -573,20 +573,12 @@ def test_aggregators_one_job_per_check(spark):
         return state.selectExpr("id", "x - 1 AS x")
 
     def run(aggs, tag):
-        sc = spark.sparkContext
-        sc.setJobGroup(tag, tag)
-        try:
-            res = run_gas(
-                g, init, step, max_iterations=10, aggregators=aggs,
-                observe_aggs=lambda: [
-                    F.sum((F.col("x") > 0).cast("long")).alias("active")
-                ],
-            )
-        finally:
-            sc.setJobGroup("idle", "idle")
-        n_jobs = len(spark.sparkContext.statusTracker()
-                     .getJobIdsForGroup(tag))
-        return res, n_jobs
+        return count_jobs(spark, lambda: run_gas(
+            g, init, step, max_iterations=10, aggregators=aggs,
+            observe_aggs=lambda: [
+                F.sum((F.col("x") > 0).cast("long")).alias("active")
+            ],
+        ), tag)
 
     run({"a0": [F.sum("x").alias("s")]}, "agg_warmup")  # graph ingest etc.
     one, j_one = run({"a0": [F.sum("x").alias("s")]}, "agg_one")

@@ -3,7 +3,7 @@ from __future__ import annotations
 import math
 from collections import defaultdict
 
-from conftest import REF_EDGES, REF_VERTICES
+from conftest import REF_EDGES, REF_VERTICES, count_jobs
 from oracles import powerlaw_edges, sssp_oracle
 from pyspark.sql import functions as F
 
@@ -246,3 +246,88 @@ def test_write_spectral_inputs_roundtrip(spark, tmp_path):
     assert len(init) == g.num_vertices() + 1
     for i in range(3):
         assert math.isclose(init[i], 0.1 * ((i + 1) % 10) / 10.0, abs_tol=1e-12)
+
+
+# ------------------------------------------------------------- capped runs
+def test_capped_runs_pinned(spark):
+    """Each loop stopped by its iteration cap before its fixpoint
+    returns what the hand-rolled loops returned (values recorded from
+    them): the state after exactly the capped number of rounds."""
+    from powergraph_spark.algorithms import ktruss, multi_source_bfs, top_eigenvector
+
+    g = Graph.from_pandas(spark, powerlaw_edges(80, seed=17), num_partitions=4)
+    # ktruss: one (two) peel rounds, then the supports of the kept
+    # edges recounted but not yet checked; the fixpoint takes 4 rounds
+    out, rounds = ktruss(g, 5, max_rounds=1)
+    rows = [tuple(r) for r in out.collect()]
+    assert (rounds, len(rows), sum(r[2] for r in rows)) == (1, 99, 108)
+    out, rounds = ktruss(g, 5, max_rounds=2)
+    assert rounds == 2
+    assert [tuple(r) for r in out.collect()] == [(17, 33, 0)]
+
+    path = [(i, i + 1) for i in range(9)]
+    gp = Graph.from_pandas(spark, path, num_partitions=2)
+    hops, history = approx_diameter(gp, r=8, max_hops=2)
+    assert (hops, len(history)) == (2, 3)
+    assert approx_diameter(gp, r=8, max_hops=0)[0] == 0
+
+    bfs = {tuple(r) for r in multi_source_bfs(g, [0, 5], max_depth=1).collect()}
+    assert bfs == {
+        (0, 0, 0, 1.0), (0, 13, 1, 1.0), (0, 14, 1, 1.0), (0, 15, 1, 1.0),
+        (0, 17, 1, 1.0), (0, 33, 1, 1.0), (5, 5, 0, 1.0), (5, 8, 1, 1.0),
+        (5, 9, 1, 1.0), (5, 15, 1, 1.0), (5, 17, 1, 1.0), (5, 33, 1, 1.0),
+    }
+
+    # one wave of the 5-core peel (the fixpoint keeps 14 vertices)
+    got = {r["id"] for r in kcore_vertices(g, 5, max_iterations=1).collect()}
+    assert got == {
+        0, 1, 2, 4, 5, 13, 14, 15, 17, 18, 19, 20, 21, 22, 24, 27, 31, 32,
+        33, 34, 35, 36, 37, 43, 46, 49, 53, 58, 59, 60, 63, 67, 68, 75, 76,
+    }
+
+    vec, lam = top_eigenvector(g, max_iterations=0)
+    assert lam == 0.0
+    assert {r["v"] for r in vec.collect()} == {1.0 / math.sqrt(80)}
+    vec, lam = top_eigenvector(g, max_iterations=1)
+    assert math.isclose(lam, 6.625, rel_tol=1e-12)
+    got = {r["id"]: r["v"] for r in vec.collect()}
+    for vid, v in ((0, 0.04773392043446406), (2, 0.11456140904271375),
+                   (3, 0.038187136347571246)):
+        assert math.isclose(got[vid], v, rel_tol=1e-12), vid
+    g.unpersist()
+
+
+def test_top_eigenvector_zero_vector(spark):
+    """A directed single edge: the first mat-vec gives v = e_2, the
+    second is zero, so the call returns the previous v and lambda 0."""
+    from powergraph_spark.algorithms import top_eigenvector
+
+    g = Graph.from_pandas(spark, [(1, 2)], num_partitions=2)
+    vec, lam = top_eigenvector(g, symmetric=False)
+    assert {r["id"]: r["v"] for r in vec.collect()} == {1: 0.0, 2: 1.0}
+    assert lam == 0.0
+
+
+def test_loop_jobs_per_iteration(spark):
+    """Spark jobs per extra iteration of the run_gas loops: the mat-vec,
+    BFS level, peel wave or truss round and its ballot ride one
+    materialization (bounds: the maximum over 3 runs, 4 vCPUs; the
+    hand-rolled loops took 10, 7, 8 and 10)."""
+    from powergraph_spark.algorithms import ktruss, multi_source_bfs, top_eigenvector
+
+    g = Graph.from_pandas(spark, powerlaw_edges(300, seed=42), num_partitions=4)
+    # every run is capped: BFS from {0, 1} reaches depth 5, the 5-core
+    # peel takes 11 waves and the 5-truss peel 4 rounds
+    runs = {
+        "eigen": (lambda n: top_eigenvector(g, max_iterations=n, tol=0.0)[0],
+                  (2, 4), 5),
+        "bfs": (lambda n: multi_source_bfs(g, [0, 1], max_depth=n), (2, 4), 5),
+        "kcore": (lambda n: kcore_vertices(g, 5, max_iterations=n), (2, 4), 4),
+        "ktruss": (lambda n: ktruss(g, 5, max_rounds=n)[0], (1, 3), 5),
+    }
+    for name, (fn, (lo, hi), bound) in runs.items():
+        fn(lo).count()  # warm-up: the graph views and their caches
+        j_lo = count_jobs(spark, lambda: fn(lo).count(), f"{name}_lo")[1]
+        j_hi = count_jobs(spark, lambda: fn(hi).count(), f"{name}_hi")[1]
+        assert (j_hi - j_lo) / (hi - lo) <= bound, (name, j_lo, j_hi)
+    g.unpersist()
